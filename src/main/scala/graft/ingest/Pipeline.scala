@@ -2,6 +2,7 @@ package graft.ingest
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.ops.Lineage
 
 /** The reference's primary entry point (run.py:37-156) as one composed
   * Spark pipeline: list pages → case URLs (limit) → fetch → parse →
@@ -10,9 +11,21 @@ import org.apache.spark.sql.functions._
   *
   * Boundary layout at scale (SURVEY §3.1): the only executor⇄driver
   * crossings are the seed URL frame and the 1-row manifest; fetches run
-  * per-partition on executors; the routed frame is cached before fanning
-  * out to the three sinks so pages parse exactly once (the reference's
-  * shared in-memory dict, §4.1).
+  * per-partition on executors.
+  *
+  * Lineage barriers: the plan fans out at four frames — the fetched case
+  * pages, the parsed cases, the fetched scenario pages and the routed
+  * cases. Each is materialized once, eagerly, by
+  * [[graft.ops.Lineage.truncate]], and every later plan starts from a
+  * leaf over its stored rows. So each page is fetched once per input
+  * occurrence and parsed once (the reference's shared in-memory dict,
+  * §4.1), and no two branches race to compute the same partitions. The
+  * barriers also keep the sinks' plans small: built on a `.cache()`d
+  * routed frame, every sink, join and column the sinks add carried the
+  * whole parse plan — 75 operators and about 18,400 expression nodes
+  * (3,600 in the case parse, 10,600 in `ScenarioParse.parse`) — through
+  * analysis, optimization and plan-string generation, which was most of
+  * a warm pass's planning time.
   */
 object Pipeline {
 
@@ -92,129 +105,133 @@ object Pipeline {
     // (run.py:79-81 exits before writing anything)
     if (caseUrls.isEmpty) return Result(outDir, "", 0, 0, 0, 0)
 
-    // failed fetches stay in the frame: they parse from empty html and are
-    // forced onto the error route with the fetch message, so the manifest's
-    // total equals the number of crawled case URLs (run.py:114-133 parity).
-    // CACHED: the frame feeds three plan branches (error list, case parse,
-    // scenario-url derivation) — uncached, each branch would re-fetch every
-    // page, breaking the fetch-once contract (§4.1) and letting transient
-    // failures route the same URL differently per branch.
-    val casePages = Fetch.fetchPages(caseUrls.toDS())(fetch).cache()
-    // dropDuplicates: the same URL passed twice (legal per run.py, which
-    // appends without dedup) fails twice → two identical error rows, and
-    // the routing join would row-multiply 2x2 without the dedup
-    val fetchErrors = casePages.filter(col("fetch_error") =!= "")
-      .select(col("url"), col("fetch_error").as("message"))
-      .dropDuplicates("url")
-
-    // parse case pages, then fetch+parse each DISTINCT scenario page once;
-    // scenario fetch failures route their cases to 'error' with the
-    // message (reference: fetch_html raises inside the per-case try,
-    // run.py:113-120) — also cached: two branches (errors + parse)
-    val cases = CaseParse.parseMainPages(casePages)
-    val scenUrls = cases.select(col("scenario_url")).distinct()
-      .filter(col("scenario_url") =!= "").as[String]
-    val scenPagesAll = Fetch.fetchPages(scenUrls)(fetch).cache()
-    val scenErrors = scenPagesAll.filter(col("fetch_error") =!= "")
-      .select(col("url").as("scenario_url"),
-        col("fetch_error").as("scen_message"))
-    val scenPages = scenPagesAll.filter(col("fetch_error") === "")
-
-    // input position per url OCCURRENCE — the manifest roster must list
-    // cases in PROCESSING order (run.py:95-133 appends as it goes; r3
-    // verdict flagged the sorted roster as a byte-compare deviation). A
-    // duplicated input URL yields one routed row per occurrence, so both
-    // sides number occurrences within the url and join on (url, occ):
-    // input [A, B, A] rosters as A,B,A — not A,A,B as a first-wins map
-    // would. Tiny by the seed contract; joined, not broadcast-hinted.
-    val wOcc = org.apache.spark.sql.expressions.Window
-      .partitionBy("url").orderBy("seq")
-    val seqDf = caseUrls.zipWithIndex.toDF("url", "seq")
-      .withColumn("occ", row_number().over(wOcc))
-    val wRouted = org.apache.spark.sql.expressions.Window
-      .partitionBy("url").orderBy("status") // duplicate rows are identical
-    val routed = CaseParse
-      .enrichAndRoute(cases, scenPages, Some(fetchErrors), Some(scenErrors))
-      .withColumn("occ", row_number().over(wRouted))
-      .join(seqDf, Seq("url", "occ"), "left")
-      .drop("occ")
-      .cache()
-
-    try {
-      Sinks.writePerCaseJson(routed.filter(col("status") === "success"), outDir)
-      if (writePdf) {
-      val pdfInput =
-        if (fetchBinary == null) routed
-        else {
-          // each successful case's ordered image list: the representative
-          // first (render_pdf.py:361-365, {BASE}/df/{rep}), then every
-          // multimedia item as {BASE}/mf/{id}.jpg with its caption
-          // (render_pdf.py:410-420). One binary fetch per DISTINCT url
-          // across all cases (fetch-once, §4.1), joined back by position;
-          // failed fetches drop their page+caption (add_image skips).
-          val succ = routed.filter(col("status") === "success")
-            .withColumn("img_items", concat(
-              when(col("rep_img_url") =!= "",
-                array(struct(col("rep_img_url").as("iurl"),
-                  lit("代表図").as("caption"))))
-                .otherwise(array().cast(
-                  "array<struct<iurl:string,caption:string>>")),
-              transform(col("images.multimedia"), m =>
-                struct(
-                  // {BASE}/mf/{id}.jpg (render_pdf.py:26,418) — resolved
-                  // from the case url (/fkd/cf/x.html → /fkd/mf/{id}.jpg)
-                  // instead of a hardcoded site constant
-                  HtmlOps.urljoin(col("url"),
-                    concat(lit("../mf/"), m.getField("id"), lit(".jpg")))
-                    .as("iurl"),
-                  m.getField("caption").as("caption")))))
-          // dropDuplicates: a duplicated successful URL puts two identical
-          // rows in succ, which would double every image page in that
-          // case's PDF after the groupBy re-collect
-          val items = succ
-            .select(col("case_id"), posexplode(col("img_items")))
-            .toDF("case_id", "pos", "item")
-            .dropDuplicates("case_id", "pos")
-          val fetched = Fetch.fetchBinary(
-            items.select(col("item.iurl")).distinct().as[String])(fetchBinary)
-            .filter(col("fetch_error") === "" && col("content").isNotNull)
-            .select(col("url"), col("content"))
-          // NO broadcast hint: image bytes scale with the number of
-          // successful cases — a shuffle join on the url stays bounded
-          // per-partition; AQE still broadcasts when the frame is small
-          val perCase = items
-            .join(fetched, col("item.iurl") === col("url"))
-            .groupBy("case_id")
-            .agg(sort_array(collect_list(struct(col("pos"), col("content"),
-              col("item.caption").as("caption")))).as("xs"))
-            .select(col("case_id"),
-              transform(col("xs"), x => x.getField("content"))
-                .as("image_bytes"),
-              transform(col("xs"), x => x.getField("caption"))
-                .as("image_captions"))
-          routed.join(perCase, Seq("case_id"), "left")
-            .withColumn("image_bytes",
-              coalesce(col("image_bytes"), array().cast("array<binary>")))
-            .withColumn("image_captions",
-              coalesce(col("image_captions"), array().cast("array<string>")))
-        }
-        graft.sink.PdfSink.writePdfs(pdfInput, outDir)
-      }
-      val manifest = Sinks.writeManifest(routed, outDir, wrotePdf = writePdf)
-
-      val counts = routed.groupBy("status").count()
-        .as[(String, Long)].collect().toMap
-      Result(
-        outDir, manifest,
-        counts.values.sum,
-        counts.getOrElse("success", 0L),
-        counts.getOrElse("excluded", 0L),
-        counts.getOrElse("error", 0L))
-    } finally {
-      // a sink failure must not leave the frames pinned in a shared session
-      routed.unpersist()
-      scenPagesAll.unpersist()
-      casePages.unpersist()
+    // every barrier joins `barriers` once materialized; the finally
+    // releases them, so a failure in a later barrier or in a sink still
+    // frees the blocks already stored
+    val barriers = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def barrier(df: DataFrame): DataFrame = {
+      val b = Lineage.truncate(df)
+      barriers += b
+      b
     }
+    try {
+      // failed fetches stay in the frame: they parse from empty html and
+      // are forced onto the error route with the fetch message, so the
+      // manifest's total equals the number of crawled case URLs
+      // (run.py:114-133 parity). BARRIER: the pages feed the error list
+      // and the case parse; each URL occurrence is fetched exactly once,
+      // so a transient failure cannot route one URL differently per branch
+      val casePages = barrier(Fetch.fetchPages(caseUrls.toDS())(fetch))
+      // dropDuplicates: the same URL passed twice (legal per run.py, which
+      // appends without dedup) fails twice → two identical error rows, and
+      // the routing join would row-multiply 2x2 without the dedup
+      val fetchErrors = casePages.filter(col("fetch_error") =!= "")
+        .select(col("url"), col("fetch_error").as("message"))
+        .dropDuplicates("url")
+
+      // BARRIER: the parsed cases feed the scenario-url derivation and the
+      // routing join, so each case page parses once. Each DISTINCT
+      // scenario page is then fetched once (BARRIER: errors + parse);
+      // scenario fetch failures route their cases to 'error' with the
+      // message (reference: fetch_html raises inside the per-case try,
+      // run.py:113-120)
+      val cases = barrier(CaseParse.parseMainPages(casePages))
+      val scenUrls = cases.select(col("scenario_url")).distinct()
+        .filter(col("scenario_url") =!= "").as[String]
+      val scenPagesAll = barrier(Fetch.fetchPages(scenUrls)(fetch))
+      val scenErrors = scenPagesAll.filter(col("fetch_error") =!= "")
+        .select(col("url").as("scenario_url"),
+          col("fetch_error").as("scen_message"))
+      val scenPages = scenPagesAll.filter(col("fetch_error") === "")
+
+      // input position per url OCCURRENCE — the manifest roster must list
+      // cases in PROCESSING order (run.py:95-133 appends as it goes; r3
+      // verdict flagged the sorted roster as a byte-compare deviation). A
+      // duplicated input URL yields one routed row per occurrence, so both
+      // sides number occurrences within the url and join on (url, occ):
+      // input [A, B, A] rosters as A,B,A — not A,A,B as a first-wins map
+      // would. Tiny by the seed contract; joined, not broadcast-hinted.
+      val wOcc = org.apache.spark.sql.expressions.Window
+        .partitionBy("url").orderBy("seq")
+      val seqDf = caseUrls.zipWithIndex.toDF("url", "seq")
+        .withColumn("occ", row_number().over(wOcc))
+      val wRouted = org.apache.spark.sql.expressions.Window
+        .partitionBy("url").orderBy("status") // duplicate rows are identical
+      // BARRIER: the three sinks and the image assembly all read the
+      // routed cases; their plans start from this leaf
+      val routed = barrier(CaseParse
+        .enrichAndRoute(cases, scenPages, Some(fetchErrors), Some(scenErrors))
+        .withColumn("occ", row_number().over(wRouted))
+        .join(seqDf, Seq("url", "occ"), "left")
+        .drop("occ"))
+
+      Sinks.writePerCaseJson(routed.filter(col("status") === "success"), outDir)
+      if (writePdf)
+        graft.sink.PdfSink.writePdfs(
+          if (fetchBinary == null) routed else withImages(routed, fetchBinary),
+          outDir)
+      val m = Sinks.writeRunManifest(routed, outDir, wrotePdf = writePdf)
+      Result(outDir, m.file, m.total, m.success, m.excluded, m.error)
+    } finally barriers.foreach(Lineage.release)
+  }
+
+  /** The PDF sink's input: `routed` plus each successful case's fetched
+    * images and captions, in page order.
+    */
+  private def withImages(
+      routed: DataFrame, fetchBinary: String => Array[Byte]): DataFrame = {
+    val spark = routed.sparkSession
+    import spark.implicits._
+    // each successful case's ordered image list: the representative
+    // first (render_pdf.py:361-365, {BASE}/df/{rep}), then every
+    // multimedia item as {BASE}/mf/{id}.jpg with its caption
+    // (render_pdf.py:410-420). One binary fetch per DISTINCT url
+    // across all cases (fetch-once, §4.1), joined back by position;
+    // failed fetches drop their page+caption (add_image skips).
+    val succ = routed.filter(col("status") === "success")
+      .withColumn("img_items", concat(
+        when(col("rep_img_url") =!= "",
+          array(struct(col("rep_img_url").as("iurl"),
+            lit("代表図").as("caption"))))
+          .otherwise(array().cast(
+            "array<struct<iurl:string,caption:string>>")),
+        transform(col("images.multimedia"), m =>
+          struct(
+            // {BASE}/mf/{id}.jpg (render_pdf.py:26,418) — resolved
+            // from the case url (/fkd/cf/x.html → /fkd/mf/{id}.jpg)
+            // instead of a hardcoded site constant
+            HtmlOps.urljoin(col("url"),
+              concat(lit("../mf/"), m.getField("id"), lit(".jpg")))
+              .as("iurl"),
+            m.getField("caption").as("caption")))))
+    // dropDuplicates: a duplicated successful URL puts two identical
+    // rows in succ, which would double every image page in that
+    // case's PDF after the groupBy re-collect
+    val items = succ
+      .select(col("case_id"), posexplode(col("img_items")))
+      .toDF("case_id", "pos", "item")
+      .dropDuplicates("case_id", "pos")
+    val fetched = Fetch.fetchBinary(
+      items.select(col("item.iurl")).distinct().as[String])(fetchBinary)
+      .filter(col("fetch_error") === "" && col("content").isNotNull)
+      .select(col("url"), col("content"))
+    // NO broadcast hint: image bytes scale with the number of
+    // successful cases — a shuffle join on the url stays bounded
+    // per-partition; AQE still broadcasts when the frame is small
+    val perCase = items
+      .join(fetched, col("item.iurl") === col("url"))
+      .groupBy("case_id")
+      .agg(sort_array(collect_list(struct(col("pos"), col("content"),
+        col("item.caption").as("caption")))).as("xs"))
+      .select(col("case_id"),
+        transform(col("xs"), x => x.getField("content"))
+          .as("image_bytes"),
+        transform(col("xs"), x => x.getField("caption"))
+          .as("image_captions"))
+    routed.join(perCase, Seq("case_id"), "left")
+      .withColumn("image_bytes",
+        coalesce(col("image_bytes"), array().cast("array<binary>")))
+      .withColumn("image_captions",
+        coalesce(col("image_captions"), array().cast("array<string>")))
   }
 }

@@ -23,7 +23,9 @@ import org.apache.spark.sql.functions._
   */
 object Sinks {
 
-  /** K1 — per-case JSON files under `dir`; returns the file names. */
+  /** K1 — one `{case_id}_{case_name}.json` file per row of `cases`,
+    * written under `dir` by the executors.
+    */
   def writePerCaseJson(cases: DataFrame, dir: String): Unit = {
     val docCols = cases.columns
       .filterNot(Set("status", "missing_fields", "lm", "fetch_error",
@@ -42,8 +44,21 @@ object Sinks {
     }
   }
 
-  /** K3 — run manifest; returns the file name written. Roster entries
-    * carry exactly the reference's per-status key sets (run.py:96-119):
+  /** A written run manifest: its file name and its summary counts. */
+  final case class Manifest(
+      file: String, total: Long, success: Long, excluded: Long, error: Long)
+
+  /** K3 — run manifest; returns the file name written (see
+    * [[writeRunManifest]] for the summary counts too).
+    */
+  def writeManifest(routed: DataFrame, dir: String,
+      wrotePdf: Boolean = true): String =
+    writeRunManifest(routed, dir, wrotePdf).file
+
+  /** K3 — run manifest; returns the file name written and the summary
+    * counts it carries, so callers need no second job to count the
+    * routes. Roster entries carry exactly the reference's per-status key
+    * sets (run.py:96-119):
     * success → {case_id, case_name, url, status, outputs}, excluded →
     * {case_id, case_name, url, status, missing_fields}, error →
     * {url, status, message}. Null struct fields vanish from to_json,
@@ -55,8 +70,8 @@ object Sinks {
     * frames without one fall back to ordering by the entry fields
     * (deterministic either way — collect_list alone is not).
     */
-  def writeManifest(routed: DataFrame, dir: String,
-      wrotePdf: Boolean = true): String = {
+  def writeRunManifest(routed: DataFrame, dir: String,
+      wrotePdf: Boolean): Manifest = {
     val jsonName = concat(col("case_id"), lit("_"), col("case_name"),
       lit(".json"))
     val pdfName = concat(col("case_id"), lit("_"), col("case_name"),
@@ -100,10 +115,12 @@ object Sinks {
       .now(java.time.ZoneOffset.UTC)
       .truncatedTo(java.time.temporal.ChronoUnit.SECONDS)
       .toLocalDateTime.toString
+    val m = Manifest(name,
+      row.getLong(0), row.getLong(1), row.getLong(2), row.getLong(3))
     val json =
-      s"""{"processed_at":"$processedAt","summary":{"total":${row.getLong(0)},"success":${row.getLong(1)},"excluded":${row.getLong(2)},"error":${row.getLong(3)}},"cases":${row.getString(4)}}"""
+      s"""{"processed_at":"$processedAt","summary":{"total":${m.total},"success":${m.success},"excluded":${m.excluded},"error":${m.error}},"cases":${row.getString(4)}}"""
     Files.createDirectories(Paths.get(dir))
     Files.write(Paths.get(dir, name), json.getBytes(StandardCharsets.UTF_8))
-    name
+    m
   }
 }

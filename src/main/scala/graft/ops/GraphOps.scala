@@ -27,8 +27,8 @@ import org.apache.spark.sql.functions._
   * 100 TB posture: no driver-side state, no adjacency materialization
   * beyond the edge list, and exactly ONE materializing job per round: the
   * new label frame carries the previous label through its lineage
-  * truncation ([[truncate]] — `localCheckpoint` by default, which keeps
-  * plan size constant but whose blocks die with an executor; long
+  * truncation ([[Lineage.truncate]] — `localCheckpoint` by default, which
+  * keeps plan size constant but whose blocks die with an executor; long
   * production runs set `spark.graft.checkpointDir` and every truncation
   * becomes a reliable `checkpoint()` to that path instead, so an executor
   * loss recomputes from durable storage rather than killing the job), and
@@ -41,26 +41,7 @@ import org.apache.spark.sql.functions._
   */
 object GraphOps {
 
-  /** Lineage truncation for the iterative loops. Default:
-    * `localCheckpoint` — cheapest, but its blocks live in executor
-    * storage, so on a real cluster an executor loss kills them and the
-    * whole job (fine at local[32], where executor == driver). Long
-    * production runs set `spark.graft.checkpointDir` to a reliable path
-    * (HDFS / object store) and every truncation becomes a durable
-    * `checkpoint()` instead (VERDICT r18 "what's wrong" #2 — the
-    * cluster-durability knob, spec-exercised both ways).
-    */
-  @volatile private var ckptDirSet: String = null
-  private def truncate(df: DataFrame): DataFrame =
-    df.sparkSession.conf.getOption("spark.graft.checkpointDir") match {
-      case Some(dir) if dir.nonEmpty =>
-        if (ckptDirSet != dir) synchronized {
-          df.sparkSession.sparkContext.setCheckpointDir(dir)
-          ckptDirSet = dir
-        }
-        df.checkpoint()
-      case _ => df.localCheckpoint()
-    }
+  import Lineage.truncate
 
   /** Star edges from a bucketing: every row's id links to the minimum id
     * sharing its `key` — |bucket| − 1 edges per bucket instead of the

@@ -11,13 +11,34 @@ import graft.ingest.Pipeline
 object PipelineSpec {
   /** Records executor-side binary-fetch calls (local mode = same JVM). */
   val binaryFetches = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  /** Records executor-side page-fetch calls, likewise. */
+  val pageFetches = new java.util.concurrent.ConcurrentLinkedQueue[String]()
 }
 
-class PipelineSpec extends SparkSpec {
+class PipelineSpec extends SparkSpec
+    with org.scalatest.concurrent.Eventually {
+  import org.scalatest.time.SpanSugar._
 
   private def fixture(name: String): String =
     new String(Files.readAllBytes(
       Paths.get(getClass.getResource(s"/fixtures/$name").toURI)), UTF_8)
+
+  // tests copy this into a local before a fetcher captures it: a
+  // closure over the spec itself would not serialize
+  private lazy val jpeg: Array[Byte] = {
+    val img = new java.awt.image.BufferedImage(
+      32, 24, java.awt.image.BufferedImage.TYPE_INT_RGB)
+    val bos = new java.io.ByteArrayOutputStream()
+    assert(javax.imageio.ImageIO.write(img, "jpg", bos))
+    bos.toByteArray
+  }
+
+  // 701 and 703 are both case_full.html, so they share one scenario page
+  // (SZ0200703) and one set of image URLs
+  private lazy val sharedScenarioPages: Map[String, String] = Map(
+    s"$base/cf/CZ0200701.html" -> fixture("case_full.html"),
+    s"$base/cf/CZ0200703.html" -> fixture("case_full.html"),
+    s"$base/sf/SZ0200703.html" -> fixture("scenario_2b.html"))
 
   private val base = "https://www.shippai.org/fkd"
 
@@ -142,11 +163,7 @@ class PipelineSpec extends SparkSpec {
     val pages: Map[String, String] = Map(
       s"$base/cf/CZ0200701.html" -> fixture("case_full.html"),
       s"$base/sf/SZ0200703.html" -> fixture("scenario_2b.html"))
-    val img = new java.awt.image.BufferedImage(
-      32, 24, java.awt.image.BufferedImage.TYPE_INT_RGB)
-    val bos = new java.io.ByteArrayOutputStream()
-    assert(javax.imageio.ImageIO.write(img, "jpg", bos))
-    val jpeg = bos.toByteArray
+    val jpeg = this.jpeg
     PipelineSpec.binaryFetches.clear()
     val out = Files.createTempDirectory("pipeline-mm").toString
 
@@ -241,5 +258,125 @@ class PipelineSpec extends SparkSpec {
       u => pages.getOrElse(u, throw new java.io.IOException(s"404 $u")))
     assert(res.total === 2, s"expected 2 roster entries, got ${res.total}")
     assert(res.error === 2)
+  }
+
+  test("fetch-once: each case URL once per occurrence, each scenario and " +
+    "image URL once") {
+    // [703, 701, 703]: a duplicated case URL, and two cases sharing one
+    // scenario page — counted over the whole run, across every branch
+    val pages = sharedScenarioPages
+    val jpeg = this.jpeg
+    PipelineSpec.pageFetches.clear()
+    PipelineSpec.binaryFetches.clear()
+    val out = Files.createTempDirectory("pipeline-fetch-once").toString
+    val res = Pipeline.runUrls(
+      spark,
+      Seq(s"$base/cf/CZ0200703.html", s"$base/cf/CZ0200701.html",
+        s"$base/cf/CZ0200703.html"),
+      limit = 3, outDir = out)(
+      u => {
+        PipelineSpec.pageFetches.add(u)
+        pages.getOrElse(u, throw new java.io.IOException(s"404 $u"))
+      },
+      u => { PipelineSpec.binaryFetches.add(u); jpeg })
+    assert(res.total === 3 && res.success === 3)
+    import scala.jdk.CollectionConverters._
+    val pageCounts = PipelineSpec.pageFetches.asScala.toSeq
+      .groupBy(identity).map { case (u, us) => u -> us.size }
+    assert(pageCounts === Map(
+      s"$base/cf/CZ0200703.html" -> 2,
+      s"$base/cf/CZ0200701.html" -> 1,
+      s"$base/sf/SZ0200703.html" -> 1))
+    assert(PipelineSpec.binaryFetches.asScala.toSeq.sorted === Seq(
+      s"$base/df/DZ0200703.jpg",
+      s"$base/mf/MZ0200703-1.jpg",
+      s"$base/mf/MZ0200703-2.jpg"))
+  }
+
+  test("every sink plans from a leaf: analyzed sink plans stay under " +
+    "2,000 expression nodes") {
+    // with the routed frame merely cached, each sink's analyzed plan
+    // carried the whole parse (about 18,400 expression nodes)
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.execution.QueryExecution
+    def exprNodes(p: LogicalPlan): Int = p.collectWithSubqueries {
+      case n => n.expressions.map(_.collect { case e => e }.size).sum
+    }.sum
+    def hasAttr(p: LogicalPlan, names: String*): Boolean = {
+      val all = p.collectWithSubqueries { case n => n.output.map(_.name) }
+        .flatten.toSet
+      names.forall(all)
+    }
+    // (sink, expression nodes) per sink action seen
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit = {
+        val p = qe.analyzed
+        val sink = funcName match {
+          case "foreachPartition" if hasAttr(p, "js") => Some("json")
+          case "foreachPartition" if hasAttr(p, "image_captions") =>
+            Some("pdf")
+          case "head" if hasAttr(p, "excluded", "cases") => Some("manifest")
+          case _ => None
+        }
+        sink.foreach(s => seen.add(s -> exprNodes(p)))
+      }
+      override def onFailure(funcName: String, qe: QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    val pages = sharedScenarioPages
+    val jpeg = this.jpeg
+    val out = Files.createTempDirectory("pipeline-plan-size").toString
+    spark.listenerManager.register(listener)
+    try {
+      val res = Pipeline.runUrls(
+        spark,
+        Seq(s"$base/cf/CZ0200703.html", s"$base/cf/CZ0200701.html"),
+        limit = 2, outDir = out)(
+        u => pages.getOrElse(u, throw new java.io.IOException(s"404 $u")),
+        _ => jpeg)
+      assert(res.success === 2)
+      import scala.jdk.CollectionConverters._
+      // listener events arrive asynchronously
+      eventually(timeout(30.seconds), interval(100.millis)) {
+        assert(seen.asScala.map(_._1).toSet ===
+          Set("json", "pdf", "manifest"))
+      }
+      seen.asScala.foreach { case (sink, n) =>
+        assert(n < 2000, s"$sink sink's analyzed plan has $n expression nodes")
+      }
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("barriers are released after a run and after a failing sink") {
+    import org.apache.spark.storage.RDDBlockId
+    val sc = spark.sparkContext
+    def persistedRdds: Set[Int] = sc.getPersistentRDDs.keySet.toSet
+    def rddBlocks: Set[Int] = org.apache.spark.SparkEnv.get.blockManager
+      .master.getMatchingBlockIds(_.isRDD, askStorageEndpoints = true)
+      .collect { case RDDBlockId(id, _) => id }.toSet
+    val rddsBefore = persistedRdds
+    val blocksBefore = rddBlocks
+    val pages = sharedScenarioPages
+    val fetch: String => String =
+      u => pages.getOrElse(u, throw new java.io.IOException(s"404 $u"))
+    val urls = Seq(s"$base/cf/CZ0200703.html", s"$base/cf/CZ0200701.html")
+
+    val ok = Pipeline.runUrls(spark, urls, limit = 2,
+      outDir = Files.createTempDirectory("pipeline-release").toString)(fetch)
+    assert(ok.success === 2)
+    // an outDir that is a regular file: every barrier has materialized
+    // when the JSON sink fails to create the directory
+    val notADir = Files.createTempFile("pipeline-release", ".out").toString
+    intercept[java.io.IOException] {
+      Pipeline.runUrls(spark, urls, limit = 2, outDir = notADir)(fetch)
+    }
+    eventually(timeout(30.seconds), interval(100.millis)) {
+      assert(persistedRdds -- rddsBefore === Set.empty,
+        "a barrier RDD is still persisted")
+      assert(rddBlocks -- blocksBefore === Set.empty,
+        "a barrier's storage blocks are still held")
+    }
   }
 }
