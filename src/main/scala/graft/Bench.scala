@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Per-round benchmark: runs every declared query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line. Materializes through the `noop` sink so Catalyst
@@ -12,45 +13,18 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // AQE is ON by default (Spark 4's default, deliberately kept: the
-    // 100 TB deployment runs with it; SURVEY §6 records the on/off
-    // delta). SPARK_GRAFT_AQE=false reproduces the static-plan run.
-    val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "true")
-    // SPARK_GRAFT_SHUFFLE decouples partition count from thread count
-    // for the robustness experiment (SURVEY §6): a 1000-executor
-    // deployment runs thousands of shuffle partitions, so the catalog
-    // must not be tuned to partitions == cores.
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    // AQE partition coalescing keeps Spark's parallelismFirst default
-    // (round 21, measured): the docs recommend parallelismFirst=false in
-    // production (respect the advisory size), but the A/B on a 30-query
-    // slice read 65.2 s (true) vs 85.5 s (false) — at these SFs the
-    // post-shuffle work is CPU-bound on KB-sized exchanges, and
-    // coalescing to the 1 MB minPartitionSize serializes it onto 1-2
-    // cores (q17_smj 1.3→3.9 s). The knob stays env-settable so a real
-    // cluster submit can flip it with its own measurements.
-    val pFirst = sys.env.getOrElse("SPARK_GRAFT_COALESCE_PFIRST", "true")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", aqe)
-      .config("spark.sql.adaptive.skewJoin.enabled", aqe)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        pFirst)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Engine.session(settings(sys.env), "graft")
     spark.sparkContext.setLogLevel("WARN")
 
-    def materialize(name: String): Boolean =
-      try {
-        SparkEntry.queries(name)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-        true
-      } catch { case _: Throwable => false }
-      finally graft.ops.CacheScope.drain() // no cross-query cache buildup
+    // a failed query prints its cause to stderr; stdout carries only the
+    // blob and the trailer the driver parses
+    def run(name: String): Boolean = materialize(spark, sfDir, name) match {
+      case Some(e) =>
+        System.err.println(
+          s"$name failed: ${e.getClass.getName}: ${e.getMessage}")
+        false
+      case None => true
+    }
 
     // SPARK_GRAFT_ONLY=q08_chunk3,q17_smj narrows the run for local
     // iteration; the driver leaves it unset and benches the full catalog.
@@ -65,7 +39,7 @@ object Bench {
     def timedMedian3(name: String): Option[Double] = {
       val runs = Seq.fill(3) {
         val t0 = System.nanoTime()
-        val ok = materialize(name)
+        val ok = run(name)
         (ok, (System.nanoTime() - t0) / 1e9)
       }
       if (runs.exists(!_._1)) None
@@ -83,7 +57,7 @@ object Bench {
         val f = scala.io.Source.fromFile("/proc/stat").getLines()
           .next().trim.split("\\s+")
         if (f.length > 8) f(8).toLong * 10 else -1L
-      } catch { case _: Throwable => -1L }
+      } catch { case NonFatal(_) => -1L }
     val stealMs0 = stealMs
     // Spill telemetry (VERDICT r16 item 2's instrument): accumulated
     // memory+disk bytes spilled across all tasks, snapshotted around
@@ -141,7 +115,7 @@ object Bench {
       // would swamp the actual plan work at bench scale. Report the MEDIAN
       // of three steady-state runs — single-run timings vary ±20% from GC
       // and scheduling noise.
-      val ok = materialize(name)
+      val ok = run(name)
       val s0 = stealMs
       val sp0 = spilledBytes.get()
       val g0 = gcMsNow
@@ -235,7 +209,7 @@ object Bench {
       if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
       java.nio.file.Files.write(p,
         blob.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    } catch { case e: Throwable =>
+    } catch { case NonFatal(e) =>
       System.err.println(s"bench_full write failed: $e") }
     // Per-round durability (VERDICT r17 "what's wrong" #5): bench_full
     // is OVERWRITTEN every run and target/ is gitignored, so r16's
@@ -252,7 +226,7 @@ object Bench {
         line.getBytes(java.nio.charset.StandardCharsets.UTF_8),
         java.nio.file.StandardOpenOption.CREATE,
         java.nio.file.StandardOpenOption.APPEND)
-    } catch { case e: Throwable =>
+    } catch { case NonFatal(e) =>
       System.err.println(s"bench_history append failed: $e") }
     // Compact trailer AFTER the full blob: the driver's fixed-size tail
     // capture truncated BENCH_r10 mid-JSON and lost q01–q14 plus the total
@@ -266,4 +240,45 @@ object Bench {
     } finally spark.sparkContext.removeSparkListener(spillListener)
     spark.stop()
   }
+
+  /** The session settings, from the SPARK_GRAFT_* env vars. */
+  def settings(env: Map[String, String]): Map[String, String] = {
+    // AQE is ON by default (Spark 4's default, deliberately kept: the
+    // 100 TB deployment runs with it; SURVEY §6 records the on/off
+    // delta). SPARK_GRAFT_AQE=false reproduces the static-plan run.
+    val aqe = env.getOrElse("SPARK_GRAFT_AQE", "true")
+    // SPARK_GRAFT_SHUFFLE decouples partition count from thread count
+    // for the robustness experiment (SURVEY §6): a 1000-executor
+    // deployment runs thousands of shuffle partitions, so the catalog
+    // must not be tuned to partitions == cores.
+    val shuffle = env.get("SPARK_GRAFT_SHUFFLE")
+      .map("spark.sql.shuffle.partitions" -> _)
+    // AQE partition coalescing keeps Spark's parallelismFirst default
+    // (round 21, measured): the docs recommend parallelismFirst=false in
+    // production (respect the advisory size), but the A/B on a 30-query
+    // slice read 65.2 s (true) vs 85.5 s (false) — at these SFs the
+    // post-shuffle work is CPU-bound on KB-sized exchanges, and
+    // coalescing to the 1 MB minPartitionSize serializes it onto 1-2
+    // cores (q17_smj 1.3→3.9 s). The knob stays env-settable so a real
+    // cluster submit can flip it with its own measurements.
+    val pFirst = env.getOrElse("SPARK_GRAFT_COALESCE_PFIRST", "true")
+    Engine.driverSettings(env, Map(
+      "spark.sql.adaptive.enabled" -> aqe,
+      "spark.sql.adaptive.skewJoin.enabled" -> aqe,
+      "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> pFirst)
+      ++ shuffle)
+  }
+
+  /** Materializes catalog query `name` on `sfDir` through the `noop` sink,
+    * then drains its scoped caches (no cross-query cache buildup).
+    * Returns the failure cause; None when the query ran.
+    */
+  def materialize(spark: SparkSession, sfDir: String,
+      name: String): Option[Throwable] =
+    try {
+      SparkEntry.queries(name)(spark, sfDir)
+        .write.format("noop").mode("overwrite").save()
+      None
+    } catch { case NonFatal(e) => Some(e) }
+    finally graft.ops.CacheScope.drain()
 }

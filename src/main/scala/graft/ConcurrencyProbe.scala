@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Multi-query concurrency probe (SURVEY §6): a real cluster runs
   * catalog queries CONCURRENTLY on a shared SparkSession, while Bench
   * times them serially — this main measures the difference so the bench
@@ -19,23 +17,15 @@ import org.apache.spark.sql.SparkSession
 object ConcurrencyProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.scheduler.mode", "FAIR")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Engine.session(
+      Engine.driverSettings(conf = Map("spark.scheduler.mode" -> "FAIR")),
+      "graft")
     spark.sparkContext.setLogLevel("WARN")
     val names = Seq("q01_scan_project", "q49_tfidf", "q128_revenue_rollup",
       "q15_window_rank")
 
     def run(name: String): Unit =
-      try SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      finally graft.ops.CacheScope.drain()
+      Bench.materialize(spark, sfDir, name).foreach(e => throw e)
 
     def timed(f: => Unit): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9

@@ -1,25 +1,23 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** The session settings: SPARK_GRAFT_CPUS cores, one shuffle partition
+    * per core. events.parquet carries timestamp[ns], which the parquet
+    * reader rejects by default; Engine reads it as long nanos, converted
+    * in Tables.events. */
+  def settings(env: Map[String, String]): Map[String, String] =
+    Engine.driverSettings(env)
+
   def main(args: Array[String]): Unit = {
     // Driver passes exactly (sfDir, outDir); a third comma-separated
     // query list is a local-iteration convenience only.
     val (sfDir, outDir) = (args(0), args(1))
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet carries timestamp[ns], which the parquet reader
-      // rejects by default; read as long nanos, converted in Tables.events.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Engine.session(settings(sys.env), "graft")
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
@@ -27,8 +25,9 @@ object Verify {
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      catch { case NonFatal(e) =>
+        System.err.println(
+          s"[verify] $name failed: ${e.getClass.getName}: ${e.getMessage}")
       }
       finally graft.ops.CacheScope.drain()
     }

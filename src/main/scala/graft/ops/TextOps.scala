@@ -69,6 +69,15 @@ object TextOps {
           "０１２３４５６７８９", "0123456789")).cast("int"),
       lit(0))
 
+  /** The catalog's word tokenizer: lower-case, split on non-word runs,
+    * drop empty tokens. DuckDB's `list_filter(string_split_regex(
+    * lower(text), '\W+'), x -> len(x) > 0)` gives the same tokens
+    * (oracle-gated by q38/q48/q108/q118). Every batch query and its
+    * streaming twin calls this one kernel, so their tokens cannot drift.
+    */
+  def words(text: Column): Column =
+    filter(split(lower(text), "\\W+"), t => length(t) > 0)
+
   /** P4 — `<br>` (any spelling) → newline
     * (reference: /root/reference/src/extract.py:100-107).
     */

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.ops.TextOps.words
 import graft.plans.{Stage, StageGraph}
 
 /** Cross-query frame sharing at CATALOG granularity (VERDICT r16
@@ -30,12 +31,6 @@ import graft.plans.{Stage, StageGraph}
   */
 object MonitorBatch {
 
-  /** Shared tokenizer — identical to q38/q48/q108/q118's kernel
-    * (cross-engine parity proven by those gates since r5).
-    */
-  private def toks = filter(split(lower(col("text")), "\\W+"),
-    t => length(t) > 0)
-
   /** The four monitor targets, named exactly as their catalog entries. */
   val targets: Seq[String] = Seq("q108_source_divergence",
     "q118_heaps_curve", "q119_skew_report", "q120_len_histogram")
@@ -43,7 +38,7 @@ object MonitorBatch {
   private def stages: Seq[Stage] = Seq(
     Stage.cached("tok_frame") { (s, d, _) =>
       Tables.documents(s, d)
-        .select(col("doc_id"), col("source"), toks.as("ws"))
+        .select(col("doc_id"), col("source"), words(col("text")).as("ws"))
     },
     Stage("q108_source_divergence", "tok_frame") { (_, _, dep) =>
       PackSignal.q108From(dep("tok_frame"))

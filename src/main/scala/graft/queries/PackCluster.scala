@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.ops.TextOps.words
 
 /** q56 — embedding clustering (round 10): distributed k-means, the
   * domain-balancing / topic-mixing step of a corpus build (cluster the
@@ -147,8 +148,7 @@ object PackCluster {
     (s, d) => {
       val scored = Tables.documents(s, d)
         .select(col("doc_id"), col("text"),
-          filter(split(lower(col("text")), "\\W+"),
-            t => length(t) > 0).as("ws"))
+          words(col("text")).as("ws"))
         .select(col("doc_id"),
           expr("size(array_distinct(ws)) * 10000L div greatest(size(ws), 1)" +
             " + length(text) * 100L div greatest(size(ws), 1)").as("score"))
@@ -703,8 +703,7 @@ object PackCluster {
       val scored = graft.ops.CacheScope.persisted(
         Tables.documents(s, d)
           .select(col("doc_id"), col("n_chars"), col("text"),
-            filter(split(lower(col("text")), "\\W+"),
-              t => length(t) > 0).as("ws"))
+            words(col("text")).as("ws"))
           .select(col("doc_id"), col("n_chars"),
             expr("size(array_distinct(ws)) * 10000L div greatest(size(ws), 1)" +
               " + length(text) * 100L div greatest(size(ws), 1)").as("score")))

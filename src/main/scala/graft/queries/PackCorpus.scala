@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.ops.TextOps.words
 import graft.ops.GraphOps
 
 /** q48–q55 — corpus-construction pack (round 5): the operators a 100 TB
@@ -13,12 +14,6 @@ import graft.ops.GraphOps
   * — MEMORY oracle-parity-trapdoors).
   */
 object PackCorpus {
-
-  /** Shared tokenizer — identical to q38/q40's, so parity with DuckDB's
-    * `string_split_regex(lower(text), '\W+')` is already proven.
-    */
-  private def toks = filter(split(lower(col("text")), "\\W+"),
-    t => length(t) > 0)
 
   /** q48 — connected-components dedup clustering: documents sharing an
     * identical 2-token prefix or suffix are dup candidates (the blocking
@@ -37,7 +32,7 @@ object PackCorpus {
     "q48_cc_dedup",
     (s, d) => {
       val docs = Tables.documents(s, d)
-      val t = docs.select(col("doc_id"), toks.as("ws"))
+      val t = docs.select(col("doc_id"), words(col("text")).as("ws"))
         .filter(size(col("ws")) >= 4)
       val keyed = t.select(col("doc_id").as("id"),
         explode(array(
@@ -92,7 +87,8 @@ object PackCorpus {
     "q49_tfidf",
     (s, d) => {
       val docs = Tables.documents(s, d)
-      val ex = docs.select(col("doc_id"), explode(toks).as("token"))
+      val ex = docs.select(col("doc_id"),
+        explode(words(col("text"))).as("token"))
       val tf = ex.groupBy("doc_id", "token").agg(count(lit(1)).as("tf"))
       val df = ex.groupBy("token").agg(countDistinct("doc_id").as("df"))
       val n = docs.agg(count(lit(1)).as("n_docs"))
@@ -230,7 +226,8 @@ object PackCorpus {
     (s, d) => {
       // documentsWide: both tokenize branches are 1-task stages
       // without the size-gated scan spread (round 21, q51 −1.0 s)
-      val t = Tables.documentsWide(s, d).select(col("doc_id"), toks.as("ws"))
+      val t = Tables.documentsWide(s, d)
+        .select(col("doc_id"), words(col("text")).as("ws"))
       val base = t.filter(size(col("ws")) > 0)
         .select(col("doc_id"), size(col("ws")).as("n_tok"),
           size(array_distinct(col("ws"))).as("n_uniq"))
@@ -287,7 +284,7 @@ object PackCorpus {
     "q52_chunk_stride",
     (s, d) => {
       Tables.documents(s, d)
-        .select(col("doc_id"), toks.as("ws"))
+        .select(col("doc_id"), words(col("text")).as("ws"))
         .filter(size(col("ws")) > 0)
         .select(col("doc_id"),
           explode(sequence(lit(0), size(col("ws")) - 1, lit(48))).as("start"),
@@ -319,7 +316,7 @@ object PackCorpus {
     "q53_inverted_index",
     (s, d) => {
       val ex = Tables.documents(s, d)
-        .select(col("doc_id"), explode(toks).as("token"))
+        .select(col("doc_id"), explode(words(col("text"))).as("token"))
       val stats = ex.groupBy("token")
         .agg(count(lit(1)).as("tf"), countDistinct("doc_id").as("df"))
       val top5 = ex.select("token", "doc_id").distinct()
@@ -440,7 +437,7 @@ object PackCorpus {
     "q58_sequence_pack",
     (s, d) => {
       val chunks = Tables.documents(s, d)
-        .select(col("doc_id"), toks.as("ws"))
+        .select(col("doc_id"), words(col("text")).as("ws"))
         .filter(size(col("ws")) > 0)
         .select(col("doc_id"),
           explode(sequence(lit(0), size(col("ws")) - 1, lit(48))).as("start"),
@@ -536,7 +533,7 @@ object PackCorpus {
       : org.apache.spark.sql.DataFrame = {
     val K = 32L
     val t = Tables.documents(s, d)
-      .select(col("doc_id"), size(toks).cast("long").as("n"))
+      .select(col("doc_id"), size(words(col("text"))).cast("long").as("n"))
       .filter(col("n") > 0)
       .withColumn("b", expr(s"doc_id div $K"))
     val bases = t.groupBy("b").agg(sum("n").as("bn"))
@@ -758,7 +755,7 @@ object PackCorpus {
       val IMG = 64L; val K = 32L
       val t = graft.ops.CacheScope.persisted(
         Tables.documents(s, d)
-          .select(col("doc_id"), size(toks).cast("long").as("n"))
+          .select(col("doc_id"), size(words(col("text"))).cast("long").as("n"))
           .filter(col("n") > 0))
       val imgs = t.filter(col("doc_id") % 7 === 2)
         .select(col("doc_id"), col("n"), explode(

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.ops.TextOps.words
 
 /** q68–q71 — curation + corpus-analysis signals (round 10): the knobs a
   * corpus build turns between "filtered" and "mixed" — source-balanced
@@ -14,10 +15,6 @@ import org.apache.spark.sql.functions._
   * exposes deflate (same declaration as q27/q35).
   */
 object PackCurate {
-
-  /** Shared tokenizer — identical to q38/q40/q48's (parity proven there). */
-  private def toks = filter(split(lower(col("text")), "\\W+"),
-    t => length(t) > 0)
 
   /** q68 — proportional source quotas under a hard budget (largest-
     * remainder rounding), then the top-quota documents per source by a
@@ -129,11 +126,11 @@ object PackCurate {
       val uni = graft.ops.CacheScope.persisted(
         // documentsWide on both passes: q69's tokenize/pair HOFs are
         // the 1-task stages the scan spread parallelizes (−0.9 s)
-        Tables.documentsWide(s, d).select(explode(toks).as("tok"))
+        Tables.documentsWide(s, d).select(explode(words(col("text"))).as("tok"))
           .groupBy("tok").agg(count(lit(1)).as("n_tok")))
       val totals = uni.agg(sum("n_tok").as("nn"))
       val pairs = Tables.documentsWide(s, d)
-        .select(toks.as("ws"))
+        .select(words(col("text")).as("ws"))
         .filter(size(col("ws")) >= 2) // sequence(2, 1) would DESCEND
         .select(explode(expr(
           "flatten(transform(sequence(1, size(ws) - 1), i -> " +
@@ -231,7 +228,7 @@ object PackCurate {
     "q71_bpe_pairs",
     (s, d) => {
       val vocab = Tables.documents(s, d)
-        .select(explode(toks).as("tok"))
+        .select(explode(words(col("text"))).as("tok"))
         .groupBy("tok").agg(count(lit(1)).as("n_w"))
       vocab
         // 1-char tokens have no pairs — and MUST be filtered before the
@@ -272,7 +269,7 @@ object PackCurate {
     def vocab0(s: SparkSession, d: String): DataFrame =
       graft.ops.CacheScope.persisted(
         Tables.documents(s, d)
-          .select(explode(toks).as("tok"))
+          .select(explode(words(col("text"))).as("tok"))
           .groupBy("tok").agg(count(lit(1)).as("n_w"))
           .select(col("tok"), col("n_w"),
             regexp_replace(col("tok"), "(.)", "($1)").as("s")))
@@ -447,7 +444,7 @@ object PackCurate {
       // documentsWide: the corpus encode probe is the 1-task
       // tokenize stage the scan spread parallelizes (q145 −1.0 s)
       Tables.documentsWide(s, d)
-        .select(col("doc_id"), explode(toks).as("tok"))
+        .select(col("doc_id"), explode(words(col("text"))).as("tok"))
         .join(broadcast(enc), "tok")
         .groupBy("doc_id")
         .agg(count(lit(1)).as("n_toks"),
@@ -501,7 +498,7 @@ object PackCurate {
         size(expr("split(substring(s, 2, length(s) - 2), '\\\\)\\\\(')"))
           .as("n_sym"))
       Tables.documentsWide(s, d)
-        .select(col("lang"), explode(toks).as("tok"))
+        .select(col("lang"), explode(words(col("text"))).as("tok"))
         .join(broadcast(enc), "tok")
         .groupBy("lang")
         .agg(count(lit(1)).as("n_words"),

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import graft.ops.TextOps.words
 
 /** q59–q60 — eval-safety operators (round 10): the two gates a corpus
   * build runs before any benchmark number is trusted — decontamination
@@ -21,17 +22,14 @@ object PackDecon {
   private val Words = M / 64 // 2048 bigint words
   private[graft] val K = 3 // probes per shingle
 
-  /** Shared tokenizer — identical to q38/q40's (parity proven there). */
-  private def toks = filter(split(lower(col("text")), "\\W+"),
-    t => length(t) > 0)
-
   /** Distinct 5-word shingles, one pass (q40 uses the 4-word form).
     * `private[graft]`: the streaming twin shingles identically.
     */
   private[graft] def shingles5 =
     org.apache.spark.sql.graftglue.ExprGlue.column(
       graft.expr.WordShingleStrings(
-        org.apache.spark.sql.graftglue.ExprGlue.expression(toks), 5))
+        org.apache.spark.sql.graftglue.ExprGlue.expression(
+          words(col("text"))), 5))
 
   /** Probe i's bit position for the `sh` column — the ONE definition of
     * the hash family, which build ([[bitmapOf]] via [[pos]]) and probe
@@ -183,7 +181,7 @@ object PackDecon {
       val shingled = Tables.documents(s, d)
         .select(col("doc_id"),
           posexplode(ExprGlue.column(graft.expr.WordShingleSeq(
-            ExprGlue.expression(toks), 5))).as(Seq("pos", "sh")))
+            ExprGlue.expression(words(col("text"))), 5))).as(Seq("pos", "sh")))
       val eval = shingled.filter(col("doc_id") < 50)
         .select(col("doc_id").as("eval_id"), col("sh")).distinct()
       val corpus = shingled.filter(col("doc_id") >= 50)
@@ -348,7 +346,8 @@ object PackDecon {
     (s, d) => {
       import org.apache.spark.sql.graftglue.ExprGlue
       val ns = Seq(3, 4, 5, 6, 7)
-      val tok = Tables.documents(s, d).select(col("doc_id"), toks.as("ws"))
+      val tok = Tables.documents(s, d)
+        .select(col("doc_id"), words(col("text")).as("ws"))
       def shW(n: Int) = ExprGlue.column(graft.expr.WordShingleStrings(
         ExprGlue.expression(col("ws")), n))
       val grams = tok

@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
+import graft.ops.TextOps.words
 import graft.ops.SimOps
 
 /** q35/q36 — the remaining near-dup modalities (north-star dedup family:
@@ -29,7 +30,7 @@ object PackDedup2 {
       val docs = Tables.documents(s, d)
       val sig = docs
         .withColumn("ws",
-          filter(split(lower(col("text")), "\\W+"), t => length(t) > 0))
+          words(col("text")))
         .select(col("doc_id"), SimOps.simhashPoly(col("ws")).as("sig"))
       sig.join(
         sig.select((col("doc_id") - 1).as("doc_id"), col("sig").as("sig2")),

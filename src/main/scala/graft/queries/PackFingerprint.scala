@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.ops.TextOps.words
 
 /** q65–q66 — content-defined dedup primitives (round 10): the two text
   * fingerprinting shapes the §2.9 north-star list still owed —
@@ -17,10 +18,6 @@ import org.apache.spark.sql.functions._
   * another engine is not a fingerprint).
   */
 object PackFingerprint {
-
-  /** Shared tokenizer — identical to q38/q40/q48's (parity proven there). */
-  private def toks = filter(split(lower(col("text")), "\\W+"),
-    t => length(t) > 0)
 
   /** Positional powers of 31 for the 8-char token hash — an explicit
     * array literal (no float `pow`), mirrored in [[graft.expr.WinnowFingerprint]].
@@ -56,7 +53,7 @@ object PackFingerprint {
     (s, d) => {
       import org.apache.spark.sql.graftglue.ExprGlue
       Tables.documents(s, d)
-        .select(col("doc_id"), toks.as("ws"))
+        .select(col("doc_id"), words(col("text")).as("ws"))
         .filter(size(col("ws")) >= 8) // 4-gram winnow needs ≥ 5 grams
         .select(col("doc_id"),
           explode(ExprGlue.column(graft.expr.WinnowFingerprint(
@@ -107,7 +104,7 @@ object PackFingerprint {
     "q66_block_dedup",
     (s, d) => {
       val t = Tables.documents(s, d)
-        .select(col("doc_id"), toks.as("ws"))
+        .select(col("doc_id"), words(col("text")).as("ws"))
         .filter(size(col("ws")) > 0)
       val blocks = t
         .select(col("doc_id"),
@@ -176,7 +173,7 @@ object PackFingerprint {
     "q98_boilerplate_strip",
     (s, d) => {
       val t = Tables.documents(s, d)
-        .select(col("doc_id"), toks.as("ws"))
+        .select(col("doc_id"), words(col("text")).as("ws"))
         .filter(size(col("ws")) > 0)
       val blocks = t
         .select(col("doc_id"),
@@ -246,7 +243,7 @@ object PackFingerprint {
     import org.apache.spark.sql.graftglue.ExprGlue
     val fps = graft.ops.CacheScope.persisted(
       Tables.documents(s, d)
-        .select(col("doc_id"), toks.as("ws"))
+        .select(col("doc_id"), words(col("text")).as("ws"))
         .filter(size(col("ws")) >= 8)
         .select(col("doc_id"),
           explode(ExprGlue.column(graft.expr.WinnowFingerprint(
@@ -312,7 +309,7 @@ object PackFingerprint {
     (s, d) => {
       import org.apache.spark.sql.graftglue.ExprGlue
       def g4 = ExprGlue.column(graft.expr.WordShingleStrings(
-        ExprGlue.expression(toks), 4))
+        ExprGlue.expression(words(col("text"))), 4))
       val sets = Tables.documents(s, d).select(col("doc_id"), g4.as("g"))
       candidates(s, d)
         .join(sets.select(col("doc_id").as("doc_a"), col("g").as("ga")),

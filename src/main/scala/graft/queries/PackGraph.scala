@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
+import graft.ops.TextOps.words
 import graft.ops.GraphOps
 
 /** q61–q62 — graph operators over the corpus (round 10): link-structure
@@ -14,10 +15,6 @@ import graft.ops.GraphOps
   * oracle-parity-trapdoors).
   */
 object PackGraph {
-
-  /** Shared tokenizer — identical to q38/q40/q48's (parity proven there). */
-  private def toks = filter(split(lower(col("text")), "\\W+"),
-    t => length(t) > 0)
 
   /** q61 — PageRank, two fixed iterations over a deterministic synthetic
     * link graph (the testdata has no link column, so each doc emits
@@ -106,7 +103,7 @@ object PackGraph {
     "q62_cluster_best",
     (s, d) => {
       val docs = Tables.documents(s, d)
-      val t = docs.select(col("doc_id"), toks.as("ws"))
+      val t = docs.select(col("doc_id"), words(col("text")).as("ws"))
         .filter(size(col("ws")) >= 4)
       val keyed = t.select(col("doc_id").as("id"),
         explode(array(
@@ -114,7 +111,7 @@ object PackGraph {
           concat(lit("s:"), concat_ws(" ", slice(col("ws"), -2, 2)))))
           .as("key"))
       val (lbl, _) = GraphOps.connectedComponentsByKey(keyed)
-      val scored = docs.select(col("doc_id"), toks.as("ws"))
+      val scored = docs.select(col("doc_id"), words(col("text")).as("ws"))
         .select(col("doc_id"),
           expr("size(array_distinct(ws)) * 10000L div greatest(size(ws), 1)")
             .as("score"))
@@ -197,9 +194,9 @@ object PackGraph {
     * mechanism, same count, which is exactly what makes the
     * orientation device safe to gate.
     *
-    * Measured (`tools/ProfileQ160b` — steady-state medians with fresh
-    * caches per run, Bench's protocol; sf0.1, 137,641 edges, 1.38M
-    * triangles): edge fold (corpus scan → packed pair explode →
+    * Measured in r16 with a per-query profiler since deleted (steady-
+    * state medians with fresh caches per run, Bench's protocol; sf0.1,
+    * 137,641 edges, 1.38M triangles): edge fold (corpus scan → packed pair explode →
     * support) 1.45 s — the data-proportional core; degrees +0.45 s;
     * orientation +0.06 s; outN + intersection +0.64 s; full query
     * 2.6 s quiet / 3.0–3.6 s in the Bench harness, down from r15's

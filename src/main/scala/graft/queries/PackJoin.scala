@@ -154,9 +154,10 @@ object PackJoin {
     "q128_revenue_rollup",
     (s, d) => {
       // ORDER-cardinality pre-fold below the orders join (r16 — the
-      // §7.5 experiment, measured by ProfileQ146b on the CUBE sibling:
-      // 2.59 → 1.40 s at sf0.1): per-order line count + exact decimal
-      // revenue fold map-side-partials through one fact exchange, so
+      // §7.5 experiment, measured in r16 on the CUBE sibling with a
+      // per-query profiler since deleted: 2.59 → 1.40 s at sf0.1):
+      // per-order line count + exact decimal revenue fold
+      // map-side-partials through one fact exchange, so
       // the Expand multiplies ~orders rows, not ~lines — a 4× smaller
       // grouping-sets stream for one well-compressed shuffle. Decimal
       // addition is associative, so the two-level sum is bit-identical
@@ -554,12 +555,12 @@ object PackJoin {
     * Expand multiplies the PRE-AGGREGATED stream (partial aggregation
     * below the exchange), never the raw fact rows.
     *
-    * Stage economics, revised r16 (`tools/ProfileQ146b`): the r15
-    * audit (`ProfileQ146`) read the pair as join-scan-bound with the
-    * bare star join a ~1.0 s floor — but the §7.5 pre-fold experiment
-    * found the real lever: folding lineitem to ORDER cardinality below
-    * the orders join (one map-side-partialed fact exchange) shrinks
-    * the Expand's input ~4× and measured **2.59 → 1.40 s** here and
+    * Stage economics, revised r16 (both rounds measured with per-query
+    * profilers since deleted): the r15 audit read the pair as
+    * join-scan-bound with the bare star join a ~1.0 s floor — but the
+    * §7.5 pre-fold experiment found the real lever: folding lineitem to
+    * ORDER cardinality below the orders join (one map-side-partialed
+    * fact exchange) shrinks the Expand's input ~4× and measured **2.59 → 1.40 s** here and
     * 2.14 → 1.68 s on the q128 sibling. The two-level decimal sum is
     * associative, so the rework is hash-identical to the per-line
     * Det.dsum4 form.
@@ -567,10 +568,11 @@ object PackJoin {
   private val q146 = Q(
     "q146_revenue_cube",
     (s, d) => {
-      // q128's r16 order-cardinality pre-fold, measured HERE by
-      // ProfileQ146b: 2.59 → 1.40 s at sf0.1 — the Expand multiplies
-      // ~orders rows instead of ~lines for one map-side-partialed fact
-      // exchange; the two-level decimal sum is exact (associative)
+      // q128's r16 order-cardinality pre-fold, measured HERE in r16
+      // with a profiler since deleted: 2.59 → 1.40 s at sf0.1 — the
+      // Expand multiplies ~orders rows instead of ~lines for one
+      // map-side-partialed fact exchange; the two-level decimal sum is
+      // exact (associative)
       val li = Tables.lineitem(s, d)
         .select(col("l_orderkey"),
           (col("l_extendedprice") * (lit(1.0) - col("l_discount")))

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.ops.TextOps.words
 
 /** q116/q118/q119/q120/q121/q124 — layout-and-diagnostics pack
   * (round 14): the passes a 100 TB pipeline runs ABOUT its own data
@@ -152,10 +153,6 @@ object PackLayout {
       "equal-count file assignment via the bounded two-level row-number " +
       "device, per-file min/max pruning ranges in both dimensions")
 
-  /** Shared tokenizer — identical to q38/q48/q68/q81's (parity proven). */
-  private def toks = filter(split(lower(col("text")), "\\W+"),
-    t => length(t) > 0)
-
   /** q118 — Heaps-law vocabulary growth: split the corpus into 10
     * position deciles (by doc_id range — the crawl-order proxy), and for
     * each decile report tokens added, cumulative tokens, NEW types
@@ -211,7 +208,7 @@ object PackLayout {
   private val q118 = Q(
     "q118_heaps_curve",
     (s, d) => q118From(Tables.documents(s, d)
-      .select(col("doc_id"), toks.as("ws"))),
+      .select(col("doc_id"), words(col("text")).as("ws"))),
     Some("""
       WITH t AS (SELECT doc_id, list_filter(string_split_regex(lower(text), '\W+'), x -> len(x) > 0) AS ws FROM documents),
       ids AS (SELECT min(doc_id) lo, max(doc_id) hi FROM t),
@@ -305,7 +302,8 @@ object PackLayout {
 
   private val q119 = Q(
     "q119_skew_report",
-    (s, d) => q119From(Tables.documents(s, d).select(toks.as("ws"))),
+    (s, d) => q119From(
+      Tables.documents(s, d).select(words(col("text")).as("ws"))),
     Some("""
       WITH t AS (SELECT unnest(list_filter(string_split_regex(lower(text), '\W+'), x -> len(x) > 0)) AS tok FROM documents),
       c AS (SELECT tok, count(*) AS cnt FROM t GROUP BY tok),
@@ -377,7 +375,8 @@ object PackLayout {
 
   private val q120 = Q(
     "q120_len_histogram",
-    (s, d) => q120From(Tables.documents(s, d).select(toks.as("ws"))),
+    (s, d) => q120From(
+      Tables.documents(s, d).select(words(col("text")).as("ws"))),
     Some(s"""
       WITH t AS (SELECT list_filter(string_split_regex(lower(text), '\\W+'), x -> len(x) > 0) AS ws FROM documents),
       l AS (SELECT len(ws) AS len FROM t WHERE len(ws) > 0),
@@ -433,7 +432,7 @@ object PackLayout {
         // documentsWide: the shingle pass is the measured 1.1 s 1-task
         // stage the size-gated scan spread parallelizes (round 21)
         Tables.documentsWide(s, d)
-          .select(col("source"), toks.as("ws"))
+          .select(col("source"), words(col("text")).as("ws"))
           .filter(size(col("ws")) >= 8)
           .select(col("source"), explode(
             org.apache.spark.sql.graftglue.ExprGlue.column(

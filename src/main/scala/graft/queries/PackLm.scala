@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
+import graft.ops.TextOps.words
 
 /** q76–q77 — statistical-LM corpus machinery (round 10): the n-gram
   * count tables a Kneser–Ney language model trains from, and the
@@ -16,10 +17,6 @@ import org.apache.spark.sql.functions._
   */
 object PackLm {
 
-  /** Shared tokenizer — identical to q38/q40/q48's (parity proven there). */
-  private def toks = filter(split(lower(col("text")), "\\W+"),
-    t => length(t) > 0)
-
   /** Per-document bigram stream over any frame with a `text` column:
     * one HOF pass per row, exploded; every other column rides along
     * (doc_id batch-side; doc_id + ts for the streaming twin).
@@ -27,7 +24,7 @@ object PackLm {
     */
   private[graft] def bigramsOf(df: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame =
-    df.withColumn("ws", toks)
+    df.withColumn("ws", words(col("text")))
       .filter(size(col("ws")) >= 2)
       .withColumn("b", explode(expr(
         "transform(sequence(1, size(ws) - 1), " +
@@ -195,7 +192,7 @@ object PackLm {
     "q91_freq_spectrum",
     (s, d) => {
       val vocab = Tables.documents(s, d)
-        .select(explode(toks).as("tok"))
+        .select(explode(words(col("text"))).as("tok"))
         .groupBy("tok").agg(count(lit(1)).as("c"))
       // the spectrum is ≤ distinct-count-cardinality (tiny); persisting
       // it keeps the corpus→vocab fold at ONE run — uncached, the

@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
+import graft.ops.TextOps.words
 
 /** q63–q64 — mixture construction (round 10): the step between "filtered
   * corpus" and "training order" where the corpus's domain/language
@@ -129,10 +130,8 @@ object PackMix {
   private val q92 = Q(
     "q92_curriculum_order",
     (s, d) => {
-      val toks = filter(split(lower(col("text")), "\\W+"),
-        t => length(t) > 0)
       Tables.documents(s, d)
-        .select(col("doc_id"), toks.as("ws"))
+        .select(col("doc_id"), words(col("text")).as("ws"))
         .select(col("doc_id"),
           expr("size(array_distinct(ws)) * 10000L div greatest(size(ws), 1)")
             .as("score_bp"))

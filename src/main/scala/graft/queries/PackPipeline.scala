@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
+import graft.ops.TextOps.words
 import graft.ops.GraphOps
 
 /** q78 — the END-TO-END fuzzy-dedup pipeline (round 11, VERDICT r10
@@ -38,10 +39,6 @@ import graft.ops.GraphOps
   */
 object PackPipeline {
 
-  /** Shared tokenizer — identical to q38/q40/q48/q65's (parity proven). */
-  private def toks = filter(split(lower(col("text")), "\\W+"),
-    t => length(t) > 0)
-
   private val PowSql = "[27512614111, 887503681, 28629151, 923521, 29791, 961, 31, 1]"
 
   /** The pipeline as a declarative [[graft.plans.StageGraph]] (round 15
@@ -76,11 +73,11 @@ object PackPipeline {
     import graft.plans.Stage
     import org.apache.spark.sql.graftglue.ExprGlue
     def g4 = ExprGlue.column(graft.expr.WordShingleStrings(
-      ExprGlue.expression(toks), 4))
+      ExprGlue.expression(words(col("text"))), 4))
     Seq(
       Stage.cached("fps") { (s, d, _) =>
         Tables.documents(s, d)
-          .select(col("doc_id"), toks.as("ws"))
+          .select(col("doc_id"), words(col("text")).as("ws"))
           .filter(size(col("ws")) >= 8)
           .select(col("doc_id"),
             explode(ExprGlue.column(graft.expr.WinnowFingerprint(
@@ -126,7 +123,7 @@ object PackPipeline {
         // join, then a second scan joined back for scores — an extra
         // scan AND a doc-cardinality join for nothing; scored covers
         // every doc, so the left label join on it is identical)
-        val scored = docs.select(col("doc_id"), toks.as("ws"))
+        val scored = docs.select(col("doc_id"), words(col("text")).as("ws"))
           .select(col("doc_id"),
             expr(
               "size(array_distinct(ws)) * 10000L div greatest(size(ws), 1)")
@@ -240,7 +237,7 @@ object PackPipeline {
     (s, d) => {
       import org.apache.spark.sql.graftglue.ExprGlue
       def g4 = ExprGlue.column(graft.expr.WordShingleStrings(
-        ExprGlue.expression(toks), 4))
+        ExprGlue.expression(words(col("text"))), 4))
       val sets = Tables.documents(s, d).select(col("doc_id"), g4.as("g"))
       val jac = graft.ops.CacheScope.persisted(
         graft.plans.StageGraph.compose(stages, "candidates")(s, d)

@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
+import graft.ops.TextOps.words
 
 /** Corpus-lifecycle pack (round 11): the operations a corpus build runs
   * when data ARRIVES or LEAVES — cleaning a new crawl increment against
@@ -16,14 +17,6 @@ import org.apache.spark.sql.functions._
   * query, with re-mapped ids high above the real id range.
   */
 object PackRefresh {
-
-  /** Shared tokenizer — identical to q38/q48/q85's (parity proven).
-    * Package-visible: the q88 streaming twin
-    * ([[graft.streaming.StreamOps.incrementCleanStream]]) must segment
-    * with the identical kernel or stream and batch verdicts diverge.
-    */
-  private[graft] def toks = filter(split(lower(col("text")), "\\W+"),
-    t => length(t) > 0)
 
   /** 10-token span segmentation of `ws` — q85's device, verbatim. */
   private[graft] val spanExpr =
@@ -73,7 +66,7 @@ object PackRefresh {
       // stream, verdict assembly) and is tiny by contract — persist it
       val inc = graft.ops.CacheScope.persisted(
         inc0.withColumn("h", sha2(col("text"), 256))
-          .withColumn("ws", toks)
+          .withColumn("ws", words(col("text")))
           .filter(size(col("ws")) >= 1)
           .select(col("new_id"), col("h"), expr(spanExpr).as("spans")))
       val incSpans = inc.select(col("new_id"),
@@ -85,7 +78,7 @@ object PackRefresh {
         .distinct()
       // corpus scan 2: which increment SPANS exist? (≤ |inc spans| out)
       val hitSpan = corpus.select(col("text"))
-        .select(toks.as("ws"))
+        .select(words(col("text")).as("ws"))
         .filter(size(col("ws")) >= 1)
         .select(explode(expr(spanExpr)).as("span"))
         .join(broadcast(incSpans.select("span").distinct()),
@@ -220,7 +213,7 @@ object PackRefresh {
     * by q48's gate since r5).
     */
   private[graft] def keysOf(df: org.apache.spark.sql.DataFrame) = df
-    .select(col("doc_id"), toks.as("ws"))
+    .select(col("doc_id"), words(col("text")).as("ws"))
     .filter(size(col("ws")) >= 4)
     .select(col("doc_id").as("id"), explode(array(
       concat(lit("p:"), concat_ws(" ", slice(col("ws"), 1, 2))),
@@ -297,8 +290,8 @@ object PackRefresh {
     * grown graph), so the gate proves merged labels ≡ a from-scratch
     * rebuild on the grown graph at both SFs.
     *
-    * Measured (`tools/ProfileQ184`, steady-state medians, sf0.1, 4,500
-    * base docs + 550 increment): keyedB 0.42 s, base CC solve +0.58,
+    * Measured in r17 with a per-query profiler since deleted (steady-
+    * state medians, sf0.1, 4,500 base docs + 550 increment): keyedB 0.42 s, base CC solve +0.58,
     * labels+keyIdx caches +0.60, increment build 0.52, delta solve
     * +0.9, full 3.63 s quiet. The cost is OVERHEAD-bound, not
     * data-bound: two distributed CC solves each pay fixed

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.ops.TextOps.words
 
 /** q95 — the corpus RELEASE pipeline: the five separately-gated release
   * stages composed into one oracle-gated job, the q78 composition story
@@ -43,9 +44,6 @@ object PackRelease {
 
   private val B = 200 // release budget (q68's)
 
-  private def ws = filter(split(lower(col("text")), "\\W+"),
-    t => length(t) > 0)
-
   /** The release pipeline as a declarative [[graft.plans.StageGraph]]
     * (round 16 — VERDICT r15 item 6: the second pipeline on the DAG,
     * proving the abstraction generalizes beyond q78). Stage bodies are
@@ -60,13 +58,13 @@ object PackRelease {
     import graft.plans.Stage
     import org.apache.spark.sql.graftglue.ExprGlue
     def sh4 = ExprGlue.column(graft.expr.WordShingleStrings(
-      ExprGlue.expression(ws), 4))
+      ExprGlue.expression(words(col("text"))), 4))
     Seq(
       // stage 1: q57's score + global band — 1-row thresholds broadcast
       Stage.cached("base") { (s, d, _) =>
         val scored = Tables.documents(s, d).filter(col("doc_id") >= 25)
           .select(col("doc_id"), col("source"), col("n_chars"), col("text"),
-            ws.as("ws"))
+            words(col("text")).as("ws"))
           .select(col("doc_id"), col("source"), col("n_chars"), col("text"),
             expr("size(array_distinct(ws)) * 10000L div greatest(size(ws), 1)" +
               " + length(text) * 100L div greatest(size(ws), 1)").as("score"))

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.ops.TextOps.words
 
 /** q86 — retrieval pack (round 11): BM25 ranked retrieval over the
   * corpus, the query-side complement of q53's inverted index — given a
@@ -31,10 +32,6 @@ import org.apache.spark.sql.functions._
   * big frames shuffle doc-keyed exactly once.
   */
 object PackRetrieval {
-
-  /** Shared tokenizer — identical to q38/q48/q68/q81's (parity proven). */
-  private def toks = filter(split(lower(col("text")), "\\W+"),
-    t => length(t) > 0)
 
   private val QueryTerms: Seq[(Long, String)] = Seq(
     0L -> "spark", 0L -> "join",
@@ -71,7 +68,7 @@ object PackRetrieval {
     // documentsWide: the shared ftStats tokenize pass (q86/q117/
     // q181) is 1-task work without the scan spread (round 21)
     val ex = Tables.documentsWide(s, d)
-      .select(col("doc_id"), explode(toks).as("term"))
+      .select(col("doc_id"), explode(words(col("text"))).as("term"))
     val ftAggs = count(lit(1)).as("dl") +:
       terms.map(t => sum(when(col("term") === t, 1L).otherwise(0L))
         .as(s"tf_$t"))

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.ops.TextOps.words
 
 /** q38/q39 — corpus-statistics and sampling operators (round 3 extension
   * of the §2.9 LLM-data-pipeline surface).
@@ -24,7 +25,7 @@ object PackSample {
       val docs = Tables.documents(s, d)
       docs
         .select(explode(
-          filter(split(lower(col("text")), "\\W+"), t => length(t) > 0))
+          words(col("text")))
           .as("token"))
         .groupBy("token")
         .agg(count(lit(1)).as("n"))
@@ -87,13 +88,11 @@ object PackSample {
     (s, d) => {
       // native one-pass shingle strings (the HOF slice+concat form cost
       // 4.5 s at sf0.1 — the same interpreted-per-window shape q27 had)
-      def shingles(k: Int) = {
-        val words = filter(split(lower(col("text")), "\\W+"),
-          t => length(t) > 0)
+      def shingles(k: Int) =
         org.apache.spark.sql.graftglue.ExprGlue.column(
           graft.expr.WordShingleStrings(
-            org.apache.spark.sql.graftglue.ExprGlue.expression(words), k))
-      }
+            org.apache.spark.sql.graftglue.ExprGlue.expression(
+              words(col("text"))), k))
       val docs = Tables.documents(s, d)
       val eval = docs.filter(col("doc_id") < 25)
         .select(explode(shingles(4)).as("sh")).distinct()

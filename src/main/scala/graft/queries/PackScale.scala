@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
+import graft.ops.TextOps.words
 import graft.ops.SkewOps
 
 /** q41 — scale-mechanics pack: operators whose POINT is the 100 TB
@@ -249,8 +250,6 @@ object PackScale {
     val D = 4; val W = 256L; val M = 2147483647L
     def a(j: Int): Long = (j + 7) * 1103515245L % M
     def c(j: Int): Long = (j + 7) * 2654435761L % M
-    def toks = filter(split(lower(col("text")), "\\W+"),
-      t => length(t) > 0)
     /** Token hash column for a frame carrying `tok`. */
     def th = org.apache.spark.sql.graftglue.ExprGlue.column(
       graft.expr.PolyTokenHash(
@@ -270,7 +269,7 @@ object PackScale {
       val D = Cms.D
       val vocab = graft.ops.CacheScope.persisted(
         Tables.documents(s, d)
-          .select(explode(Cms.toks).as("tok"))
+          .select(explode(words(col("text"))).as("tok"))
           .groupBy("tok").agg(count(lit(1)).as("c"))
           .withColumn("th", Cms.th))
       val cellsOf = Cms.cellsOf

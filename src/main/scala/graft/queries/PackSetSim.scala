@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
+import graft.ops.TextOps.words
 
 /** q94 — EXACT threshold set-similarity self-join via df-ordered prefix
   * filtering (the AllPairs/PPJoin family: Chaudhuri et al. ICDE'06
@@ -44,15 +45,12 @@ import org.apache.spark.sql.functions._
   */
 object PackSetSim {
 
-  private def toks = filter(split(lower(col("text")), "\\W+"),
-    t => length(t) > 0)
-
   private val q94 = Q(
     "q94_setsim_join",
     (s, d) => {
       import org.apache.spark.sql.graftglue.ExprGlue
       def g4 = ExprGlue.column(graft.expr.WordShingleStrings(
-        ExprGlue.expression(toks), 4))
+        ExprGlue.expression(words(col("text"))), 4))
       val sets = graft.ops.CacheScope.persisted(
         Tables.documents(s, d)
           .select(col("doc_id"), g4.as("ws"))
@@ -138,7 +136,7 @@ object PackSetSim {
     (s, d) => {
       import org.apache.spark.sql.graftglue.ExprGlue
       def g4 = ExprGlue.column(graft.expr.WordShingleStrings(
-        ExprGlue.expression(toks), 4))
+        ExprGlue.expression(words(col("text"))), 4))
       val sh = Tables.documents(s, d)
         .select(col("source"), explode(g4).as("shingle"))
         .distinct()

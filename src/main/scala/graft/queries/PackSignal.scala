@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
+import graft.ops.TextOps.words
 
 /** q81/q82/q84 — corpus-signal pack (round 11): per-document signals
   * computed against CORPUS-LEVEL statistics, the family of passes a
@@ -20,14 +21,6 @@ import org.apache.spark.sql.functions._
   * oracle-parity-trapdoors — float ties differ across engines).
   */
 object PackSignal {
-
-  /** Shared tokenizer — identical to q38/q48/q68's (parity proven there).
-    * Package-visible: the q111 streaming drift twin
-    * ([[graft.streaming.StreamOps]] `driftStream`) must tokenize with
-    * the identical kernel or stream and batch readouts diverge.
-    */
-  private[graft] def toks = filter(split(lower(col("text")), "\\W+"),
-    t => length(t) > 0)
 
   /** q81 — n-gram novelty: for each document, the share of its DISTINCT
     * word 4-grams whose corpus-wide FIRST occurrence (minimum doc_id
@@ -50,7 +43,7 @@ object PackSignal {
     "q81_ngram_novelty",
     (s, d) => {
       val grams = Tables.documents(s, d)
-        .select(col("doc_id"), toks.as("ws"))
+        .select(col("doc_id"), words(col("text")).as("ws"))
         .filter(size(col("ws")) >= 4)
         // native kernel (r14): identical strings to the HOF
         // array_distinct(transform(..array_join(slice)..)) chain it
@@ -132,7 +125,8 @@ object PackSignal {
     "q82_dsir_weights",
     (s, d) => {
       def tokBuckets = Tables.documents(s, d)
-        .select(col("doc_id"), col("lang"), explode(toks).as("tok"))
+        .select(col("doc_id"), col("lang"),
+          explode(words(col("text"))).as("tok"))
         .withColumn("b", bucketCol)
       val hist = tokBuckets.groupBy("b").agg(
         count(lit(1)).as("n_raw"),
@@ -189,7 +183,8 @@ object PackSignal {
       val bl = Blocklist.map(t => s"'$t'").mkString("array(", ", ", ")")
       val al = AllowLangs.map(l => s"'$l'").mkString(", ")
       Tables.documents(s, d)
-        .select(col("doc_id"), col("lang"), col("n_chars"), toks.as("ws"))
+        .select(col("doc_id"), col("lang"), col("n_chars"),
+          words(col("text")).as("ws"))
         .select(col("doc_id"), col("lang"), col("n_chars"),
           expr("cast(size(ws) as bigint)").as("n_toks"),
           expr(s"cast(size(filter(ws, t -> array_contains($bl, t))) as bigint)")
@@ -248,7 +243,7 @@ object PackSignal {
     "q85_span_dedup",
     (s, d) => {
       val spans = Tables.documents(s, d)
-        .select(col("doc_id"), toks.as("ws"))
+        .select(col("doc_id"), words(col("text")).as("ws"))
         .filter(size(col("ws")) >= 1)
         .select(col("doc_id"), posexplode(expr(
           "transform(sequence(0, (size(ws) - 1) div 10), " +
@@ -313,7 +308,8 @@ object PackSignal {
     (s, d) => {
       val scored = graft.ops.CacheScope.persisted(
         Tables.documents(s, d)
-          .select(col("doc_id"), col("source"), col("lang"), toks.as("ws"))
+          .select(col("doc_id"), col("source"), col("lang"),
+            words(col("text")).as("ws"))
           .select(col("doc_id"), col("source"), col("lang"),
             expr("size(array_distinct(ws)) * 10000L div greatest(size(ws), 1)")
               .as("score_bp")))
@@ -382,7 +378,7 @@ object PackSignal {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy("source")
       val scored = Tables.documents(s, d)
-        .select(col("doc_id"), col("source"), toks.as("ws"))
+        .select(col("doc_id"), col("source"), words(col("text")).as("ws"))
         .select(col("doc_id"), col("source"),
           expr("size(array_distinct(ws)) * 10000L div greatest(size(ws), 1)")
             .as("score_bp"))
@@ -440,7 +436,7 @@ object PackSignal {
     (s, d) => {
       import org.apache.spark.sql.expressions.Window
       val t = Tables.documents(s, d)
-        .select(col("doc_id"), toks.as("ws"))
+        .select(col("doc_id"), words(col("text")).as("ws"))
         .filter(size(col("ws")) >= 1)
       val dig = t
         .select(col("doc_id"), posexplode(col("ws")))
@@ -569,7 +565,7 @@ object PackSignal {
   private val q108 = Q(
     "q108_source_divergence",
     (s, d) => q108From(Tables.documents(s, d)
-      .select(col("source"), toks.as("ws"))),
+      .select(col("source"), words(col("text")).as("ws"))),
     Some("""
       WITH t AS (SELECT source, unnest(list_filter(
                    string_split_regex(lower(text), '\W+'),
@@ -617,7 +613,7 @@ object PackSignal {
     (s, d) => {
       val sb = graft.ops.CacheScope.persisted(
         Tables.documents(s, d)
-          .select(col("source"), explode(toks).as("tok"))
+          .select(col("source"), explode(words(col("text"))).as("tok"))
           .withColumn("b", bucketCol)
           .groupBy("source", "b").agg(count(lit(1)).as("cnt")))
       val ref = sb.groupBy("b").agg(sum("cnt").as("r_b"))

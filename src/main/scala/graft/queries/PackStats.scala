@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.ops.TextOps.words
 
 /** q126/q127 — warehouse-hygiene pack (round 14): the relational-side
   * passes a table owner runs on every ingest —
@@ -421,10 +422,9 @@ object PackStats {
     (s, d) => {
       import org.apache.spark.sql.expressions.Window
       val docs = Tables.documents(s, d)
-      val toks = filter(split(lower(col("text")), "\\W+"),
-        t => length(t) > 0)
       val base = docs
-        .select(col("source"), size(toks).cast("long").as("n_toks"),
+        .select(col("source"),
+          size(words(col("text"))).cast("long").as("n_toks"),
           col("n_chars"))
         .groupBy("source")
         .agg(count(lit(1)).as("n_docs"), sum("n_toks").as("total_toks"),

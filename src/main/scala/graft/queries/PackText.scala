@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.ops.TextOps.words
 import graft.ops.SimOps
 
 /** LLM-data-pipeline pack — q24, q25, q26 (SURVEY.md §2.9).
@@ -237,7 +238,7 @@ object PackText {
   private def plantedCorpus(s: org.apache.spark.sql.SparkSession,
       d: String): org.apache.spark.sql.DataFrame = {
     val base = Tables.documents(s, d)
-      .select(col("doc_id"), PackSignal.toks.as("ws"))
+      .select(col("doc_id"), words(col("text")).as("ws"))
     val don60 = base
       .filter(col("doc_id") % 40 === 3 && size(col("ws")) >= 60)
       .select((col("doc_id") + 900000L).as("doc_id"),
@@ -471,11 +472,9 @@ object PackText {
     (s, d) => {
       import org.apache.spark.sql.expressions.Window
       val P = 16
-      val ws = filter(split(lower(col("text")), "\\W+"),
-        t => length(t) > 0)
       val groups = graft.ops.CacheScope.persisted(
         Tables.documents(s, d)
-          .select(ws.as("ws"))
+          .select(words(col("text")).as("ws"))
           .filter(size(col("ws")) >= P)
           .select(array_join(slice(col("ws"), 1, P), " ").as("prefix"))
           .groupBy("prefix").agg(count(lit(1)).as("n_docs"))

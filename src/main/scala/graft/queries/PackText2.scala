@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.functions._
+import graft.ops.TextOps.words
 import graft.expr.PolyHash
 import graft.ops.SimOps
 
@@ -226,7 +227,7 @@ object PackText2 {
       // into its own Project (same rationale as q29 — r3 advice).
       docs
         .withColumn("toks",
-          filter(split(lower(col("text")), "\\W+"), t => length(t) > 0))
+          words(col("text")))
         .withColumn("n_tokens", size(col("toks")))
         .withColumn("n_stop",
           size(array_intersect(array_distinct(col("toks")),

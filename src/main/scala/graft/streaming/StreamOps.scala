@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.ops.TextOps.words
 import org.apache.spark.sql.types._
 
 /** Structured Streaming surface (SURVEY.md §2.8 — north-star requirement,
@@ -467,8 +468,7 @@ object StreamOps {
     import sp.implicits._
     val spans = docs.withWatermark("ts", delay)
       .select(col("doc_id"), col("ts"),
-        filter(split(lower(col("text")), "\\W+"),
-          t => length(t) > 0).as("ws"))
+        words(col("text")).as("ws"))
       .filter(size(col("ws")) >= 1)
       .select(col("doc_id"), col("ts"), posexplode(expr(
         "transform(sequence(0, (size(ws) - 1) div 10), " +
@@ -522,7 +522,7 @@ object StreamOps {
     */
   def cmsStream(docs: DataFrame): DataFrame = {
     import graft.queries.PackScale.Cms
-    docs.select(explode(Cms.toks).as("tok"))
+    docs.select(explode(words(col("text"))).as("tok"))
       .withColumn("th", Cms.th)
       .select(Cms.cellsOf: _*)
       .select(Cms.cellExplode.as("cell"))
@@ -617,7 +617,7 @@ object StreamOps {
     * wants "how far has source X drifted from the reference" after
     * every batch.
     *
-    * The kernel is literally q111's (`PackSignal.toks` / `bucketCol` —
+    * The kernel is literally q111's (`TextOps.words` / `bucketCol` —
     * the explicit PolyHash feature space, and the identical
     * full-support TV algebra in exact BigInt), so stream and batch
     * readouts agree when the stream replays the reference corpus
@@ -637,14 +637,14 @@ object StreamOps {
     import sp.implicits._
     val nb = PackSignal.NB
     val refArr = Array.fill(nb)(0L)
-    reference.select(explode(PackSignal.toks).as("tok"))
+    reference.select(explode(words(col("text"))).as("tok"))
       .select(PackSignal.bucketCol.as("b"))
       .groupBy("b").agg(count(lit(1)).as("n"))
       .as[(Long, Long)].collect()
       .foreach { case (b, n) => refArr(b.toInt) = n }
     val rr = BigInt(refArr.sum)
     docs
-      .select(col("source").as("g"), explode(PackSignal.toks).as("tok"))
+      .select(col("source").as("g"), explode(words(col("text"))).as("tok"))
       .select(col("g"), PackSignal.bucketCol.as("b"))
       .as[DriftRow]
       .groupByKey(_.g)
@@ -713,13 +713,13 @@ object StreamOps {
       corpus.select(sha2(col("text"), 256).as("h")).distinct()
         .withColumn("isdup", lit(1L)))
     val corpusSpans = graft.ops.CacheScope.persisted(
-      corpus.select(PackRefresh.toks.as("ws"))
+      corpus.select(words(col("text")).as("ws"))
         .filter(size(col("ws")) >= 1)
         .select(explode(expr(PackRefresh.spanExpr)).as("span")).distinct()
         .withColumn("stale", lit(1L)))
     inc.withWatermark("ts", delay)
       .withColumn("h", sha2(col("text"), 256))
-      .withColumn("ws", PackRefresh.toks)
+      .withColumn("ws", words(col("text")))
       .filter(size(col("ws")) >= 1)
       .select(col("new_id"), col("ts"), col("h"),
         explode(expr(PackRefresh.spanExpr)).as("span"))
@@ -897,19 +897,17 @@ object StreamOps {
       corpus: DataFrame,
       delay: String = "10 minutes"): DataFrame = {
     val W = 50
-    val toks = filter(split(lower(col("text")), "\\W+"),
-      t => length(t) > 0)
     def fps(wsCol: org.apache.spark.sql.Column) =
       org.apache.spark.sql.graftglue.ExprGlue.column(
         graft.expr.PosShingleHash62(
           org.apache.spark.sql.graftglue.ExprGlue.expression(wsCol), W))
     val corpusFps = graft.ops.CacheScope.persisted(
-      corpus.select(toks.as("ws"))
+      corpus.select(words(col("text")).as("ws"))
         .filter(size(col("ws")) >= W)
         .select(explode(fps(col("ws"))).as("h")).distinct()
         .withColumn("hit", lit(1L)))
     inc.withWatermark("ts", delay)
-      .withColumn("ws", toks)
+      .withColumn("ws", words(col("text")))
       .withColumn("n", size(col("ws")).cast("long"))
       .filter(col("n") >= 1)
       .select(col("new_id"), col("ts"), col("n"),

@@ -1,18 +1,15 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print the executed plan of any catalog queries by name
   * (`runMain graft.tools.Explain q68_source_quota q69_cooccur_lift`).
   * No args → every query, in catalog order — the quick way to eyeball a
-  * new operator's plan before pinning it in PlanSpec.
+  * new operator's plan before pinning it in PlanSpec. Runs on the test
+  * suite's local[4] / 4-partition session, so plans read as PlanSpec sees
+  * them.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Engine.session("local[4]", Some(4))
     spark.sparkContext.setLogLevel("ERROR")
     val names =
       if (args.nonEmpty) args.toSeq

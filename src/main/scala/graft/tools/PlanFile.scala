@@ -1,12 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Write `.explain("formatted")` output for named catalog queries to
   * files (round 21 optimization evidence): the before/after plan
-  * artifacts under plans/r21/. Session config mirrors graft.Bench
-  * (local[32], shuffle=32, AQE on) so the committed plans are the ones
-  * the bench actually runs.
+  * artifacts under plans/r21/. The session is graft.Bench's (same
+  * settings and SPARK_GRAFT_* env vars) so the committed plans are the
+  * ones the bench actually runs.
   *
   * Run: sbt "runMain graft.tools.PlanFile <suffix> <query>..."
   *   → $SPARK_GRAFT_PLAN_DIR (default plans/r22)/<query>_<suffix>.txt
@@ -16,14 +14,7 @@ object PlanFile {
     val suffix = args.head
     val names = args.drop(1).toSeq
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Engine.session(graft.Bench.settings(sys.env), "graft")
     spark.sparkContext.setLogLevel("ERROR")
     val dir = java.nio.file.Paths.get(
       sys.env.getOrElse("SPARK_GRAFT_PLAN_DIR", "plans/r22"))

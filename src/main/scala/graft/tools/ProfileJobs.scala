@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** Per-JOB wall-clock decomposition of any catalog queries (round 21 —
   * the optimization round's first instrument): runs each named query
@@ -17,14 +16,7 @@ object ProfileJobs {
   def main(args: Array[String]): Unit = {
     val d = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Engine.session(graft.Bench.settings(sys.env), "graft")
     spark.sparkContext.setLogLevel("ERROR")
 
     case class J(id: Int, var t0: Long = 0L, var t1: Long = 0L,
@@ -53,11 +45,8 @@ object ProfileJobs {
     for (q <- names) {
       def run(): Double = {
         val t0 = System.nanoTime()
-        graft.SparkEntry.queries(q)(spark, d)
-          .write.format("noop").mode("overwrite").save()
-        val dt = (System.nanoTime() - t0) / 1e9
-        graft.ops.CacheScope.drain()
-        dt
+        graft.Bench.materialize(spark, d, q).foreach(e => throw e)
+        (System.nanoTime() - t0) / 1e9
       }
       run() // warm plan shapes, caches, JIT
       run()

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Synthesize a larger scale factor from sf0.1 for the SCALING
@@ -27,13 +26,10 @@ object ScaleUp {
   def main(args: Array[String]): Unit = {
     val (src, dst, k) = (args(0), args(1), args(2).toInt)
     val Off = 10000000L
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // a fixed 32 shuffle partitions whatever the core count, matching
+    // the 32 files written per table (repartition(32) below)
+    val spark = graft.Engine.session(graft.Engine.driverSettings(
+      conf = Map("spark.sql.shuffle.partitions" -> "32")), "graft")
     spark.sparkContext.setLogLevel("WARN")
 
     // replicas as a generator column: one read of the base table, a

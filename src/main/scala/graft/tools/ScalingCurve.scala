@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Empirical scaling curves for the bench's heavy tail (round 16 —
   * VERDICT r15 item 4): per query, steady-state median wall time at
   * sf0.001 / sf0.01 / sf0.1 plus the empirical exponent over the TOP
@@ -129,20 +127,13 @@ object ScalingCurve {
         "q128_revenue_rollup")
     val sfs = Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01",
       "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Engine.session(graft.Bench.settings(sys.env), "graft")
     spark.sparkContext.setLogLevel("ERROR")
 
     def once(name: String, sf: String): Double = {
       val t0 = System.nanoTime()
-      graft.SparkEntry.queries(name)(spark, sf)
-        .write.format("noop").mode("overwrite").save()
-      val dt = (System.nanoTime() - t0) / 1e9
-      graft.ops.CacheScope.drain()
-      dt
+      graft.Bench.materialize(spark, sf, name).foreach(e => throw e)
+      (System.nanoTime() - t0) / 1e9
     }
     def median3(name: String, sf: String): Double = {
       once(name, sf) // warm

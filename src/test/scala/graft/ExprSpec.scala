@@ -151,6 +151,17 @@ class ExprSpec extends SparkSpec {
         "SELECT float_dot(array(cast(2.0 AS float)), array(cast(3.0 AS float)))")
         .head().getDouble(0)
       assert(d === 6.0)
+      // s2 is now the running session: a static key in conf neither
+      // throws nor reads back as applied, and the skip is reported
+      val err = new java.io.ByteArrayOutputStream
+      val wh = "/nonexistent/graft-wh"
+      val s3 = Console.withErr(err) {
+        graft.Engine.session(master = "local[2]", shufflePartitions = Some(4),
+          conf = Map("spark.sql.warehouse.dir" -> wh))
+      }
+      assert(s3 eq s2)
+      assert(s3.conf.get("spark.sql.warehouse.dir") !== wh)
+      assert(err.toString.contains(s"spark.sql.warehouse.dir=$wh not applied"))
     } finally {
       org.apache.spark.sql.SparkSession.setDefaultSession(prev)
       org.apache.spark.sql.SparkSession.setActiveSession(prev)

@@ -7,17 +7,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * suite fast; tests only read tiny in-memory frames).
   */
 object TestSpark {
+  /** local[4] with 4 shuffle partitions (PlanSpec's pinned plans read
+    * these) and a throwaway warehouse. */
+  lazy val settings: Map[String, String] = Engine.settings("local[4]", Some(4),
+    Map("spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft-wh").toString))
+
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh").toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-test")
-      .getOrCreate()
+    val s = Engine.session(settings, "graft-test")
     s.sparkContext.setLogLevel("ERROR")
     s
   }
