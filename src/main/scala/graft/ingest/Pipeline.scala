@@ -33,30 +33,12 @@ object Pipeline {
       outDir: String, manifestFile: String,
       total: Long, success: Long, excluded: Long, error: Long)
 
-  /** Run end-to-end from list-page URLs. `fetch` resolves any URL to HTML
-    * (an HTTP client in deployment; a fixture reader in tests).
-    * `fetchBinary` (optional) resolves image URLs to bytes — when given,
-    * each successful case's representative image is fetched executor-side
-    * and embedded in its PDF, the reference's download_image → scale-to-fit
-    * path (render_pdf.py:90-118); fetch failures just skip the image page.
+  /** S1+S2: one list page's case URLs under the PER-LIST limit (the
+    * reference calls extract_case_urls_from_list(url, limit) per URL,
+    * run.py:70-71 — a single global CollectLimit over all pages would cap
+    * the total and pick nondeterministically across lists); the collected
+    * seed is tiny by contract.
     */
-  def run(
-      spark: SparkSession,
-      listUrls: Seq[String],
-      limit: Int,
-      outDir: String,
-      writePdf: Boolean = true)(
-      fetch: String => String,
-      fetchBinary: String => Array[Byte] = null): Result = {
-    // S1+S2: crawl each list page with the PER-LIST limit (the reference
-    // calls extract_case_urls_from_list(url, limit) per URL, run.py:70-71 —
-    // a single global CollectLimit over all pages would cap the total and
-    // pick nondeterministically across lists); the collected seed is tiny
-    // by contract
-    val caseUrls = listUrls.flatMap(lu => crawlList(spark, lu, limit)(fetch))
-    processCases(spark, caseUrls, outDir, writePdf)(fetch, fetchBinary)
-  }
-
   private def crawlList(
       spark: SparkSession, listUrl: String, limit: Int)(
       fetch: String => String): Seq[String] = {
@@ -66,10 +48,17 @@ object Pipeline {
     CaseParse.caseUrlsFromLists(lp, limit).as[String].collect().toSeq
   }
 
-  /** run.py CLI parity (run.py:66-81): URLs may mix list pages (`/lis/`,
-    * expanded with the PER-LIST limit), direct case pages (`/cf/`), and
-    * anything else (warn-skipped). The expanded set flows through the same
-    * pipeline.
+  /** Run end-to-end — run.py CLI parity (run.py:66-81): URLs may mix list
+    * pages (`/lis/`, expanded with the PER-LIST limit), direct case pages
+    * (`/cf/`), and anything else (warn-skipped). The expanded set flows
+    * through the same pipeline.
+    *
+    * `fetch` resolves any URL to HTML (an HTTP client in deployment; a
+    * fixture reader in tests). `fetchBinary` (optional) resolves image
+    * URLs to bytes — when given, each successful case's representative
+    * image is fetched executor-side and embedded in its PDF, the
+    * reference's download_image → scale-to-fit path (render_pdf.py:90-118);
+    * fetch failures just skip the image page.
     */
   def runUrls(
       spark: SparkSession,
@@ -90,7 +79,7 @@ object Pipeline {
   }
 
   /** Fetch → parse → enrich → route → sinks for a resolved case-URL set
-    * (shared by [[run]] and [[runUrls]]).
+    * (the body of [[runUrls]]).
     */
   private def processCases(
       spark: SparkSession,

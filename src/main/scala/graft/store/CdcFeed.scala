@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
   *
   * Exactly-once composes from the stores' own arguments: both write
   * `gen=<batchId>` by overwrite from a pre-state read at `gen < batchId`
-  * ([[LabelStore]]/[[VecStore]] scaladoc), so a replay after a crash
+  * (the [[Generations]] replay rule), so a replay after a crash
   * BETWEEN the two fan-out applies re-lands the label half bit-identically
   * and completes the vector half — the pair converges on the committed
   * batch boundary.
@@ -75,18 +75,9 @@ object CdcFeed {
   def maintain(events: DataFrame, labelPath: String, vecPath: String,
       checkpoint: String, compactEvery: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        if (!batch.isEmpty) {
-          applyBatch(batch, id, labelPath, vecPath)
-          graft.ops.CacheScope.drain()
-          if (compactEvery > 0 && id > 0 && id % compactEvery == 0) {
-            LabelStore.compact(batch.sparkSession, labelPath)
-            VecStore.compact(batch.sparkSession, vecPath)
-          }
-        }
-        ()
-      }
-      .start()
+    Generations.maintain(events, checkpoint, compactEvery)(
+      applyBatch(_, _, labelPath, vecPath), { spark =>
+        LabelStore.compact(spark, labelPath)
+        VecStore.compact(spark, vecPath)
+      })
 }

@@ -13,8 +13,8 @@ import org.apache.spark.sql.functions._
   * batch and stream labels cannot diverge), writing DELTAS plus
   * TOMBSTONES, never rewriting the corpus-sized label table.
   *
-  * Layout (the Delta/Hudi merge-on-read shape, on the same generation
-  * idea as [[PartitionedStore.compactManifest]]):
+  * Layout (the Delta/Hudi merge-on-read shape; generations, commit
+  * markers and compaction follow the [[Generations]] protocol):
   *
   *   path/labels/gen=<g>/bkt=<b>/  (doc_id, comp) — gen -1 is the
   *                         bootstrap FULL table; each batch g ≥ 0
@@ -44,15 +44,14 @@ import org.apache.spark.sql.functions._
   *
   * Readers fold `max_by(comp, gen)` per key and DROP tombstones — the
   * newest generation wins, so a delete hides every older label and a
-  * later re-ingest resurrects the doc at its new label. Exactly-once:
-  * each batch writes `gen=<batchId>` by overwrite and reads its
-  * pre-state as `gen < batchId`, so a replayed batch (crash between the
-  * writes and the checkpoint commit) recomputes from the SAME pre-state
-  * and overwrites the same directories — deterministic, idempotent,
-  * restart-tested. The reader's fold is corpus-cardinality per read; a
-  * long-running stream bounds the generation count the same way the
-  * manifest does — fold generations into a fresh full gen on a cadence
-  * ([[compact]], which also drops tombstoned rows and dead dockeys).
+  * later re-ingest resurrects the doc at its new label. Exactly-once is
+  * the [[Generations]] replay rule: a replayed batch recomputes from the
+  * SAME `gen < batchId` pre-state and overwrites the same directories —
+  * deterministic, idempotent, restart-tested. The reader's fold is
+  * corpus-cardinality per read; a long-running stream bounds the
+  * generation count the same way the manifest does — fold generations
+  * into a fresh full gen on a cadence ([[compact]], which also drops
+  * tombstoned rows and dead dockeys).
   */
 object LabelStore {
 
@@ -120,90 +119,39 @@ object LabelStore {
       .write.mode("overwrite").parquet(s"$path/dockeys/gen=-1")
   }
 
-  /** The generation ids present under `dir` (cheap directory listing,
-    * no Spark job).
+  /** The visible generations of `path/sub` under the [[Generations]]
+    * protocol — a batch spans up to three table writes (labels, keyidx,
+    * dockeys), so positives wait for its commit marker; the gen −1
+    * bootstrap needs none, as init precedes any reader by contract —
+    * strictly below `asOf` when given. `asOf` is an AUDIT bound and must lie above the
+    * compaction horizon; internal replay bounds (`before` in
+    * [[applyBatch]]/[[lookupLabels]]) filter the unbounded read instead.
     */
-  private def genIds(spark: SparkSession, dir: String): Seq[Long] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("gen="))
-      .map(_.getPath.getName.stripPrefix("gen=").toLong)
+  private def live(spark: SparkSession, path: String, sub: String,
+      asOf: Option[Long] = None): DataFrame = {
+    val gens = Generations.list(spark, s"$path/$sub", Some(path))
+    gens.checkAsOf(asOf)
+    val raw = open(spark, gens)
+    asOf.fold(raw)(b => raw.filter(col("gen") < b))
   }
 
-  /** READ-COMMITTED generation visibility (round 20 — [[VecStore]]'s
-    * marker scheme, identically): a batch's generation spans up to
-    * THREE table writes (labels, keyidx, dockeys), and a reader racing
-    * the maintainer between them — or inside one write's job-commit
-    * rename window — would fold a torn batch. [[applyBatch]] creates
-    * `path/_commits/<id>` after ALL of its writes; readers treat the
-    * newest marker as the positive-generation ceiling. Negative
-    * generations need no marker: compaction folds publish by one
-    * atomic rename, and the init bootstrap precedes any reader by
-    * contract. The documented residual gap is
-    * the crash REPLAY, which overwrites an already-marked generation
-    * with identical bytes — reads during that window keep the
-    * single-writer assumption, as before.
-    */
-  private def committedMax(spark: SparkSession, path: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/_commits")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) -1L
-    else fs.listStatus(p).foldLeft(-1L)((m, st) =>
-      math.max(m, st.getPath.getName.toLong))
+  private def open(spark: SparkSession,
+      gens: Generations.Listing): DataFrame = {
+    require(gens.ids.nonEmpty,
+      s"LabelStore not initialized: no gen= directories under " +
+        s"${gens.dir} (run LabelStore.init first)")
+    gens.read(spark)
   }
 
-  private def markCommitted(spark: SparkSession, path: String,
-      id: Long): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/_commits/$id")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(p.getParent)
-    fs.create(p, true).close()
-  }
-
-  /** The live generations of `path/sub`, with the compaction HORIZON
-    * applied: a negative generation below the bootstrap encodes the
-    * batch id it folded through (gen = −(foldedThrough + 2); the gen −1
-    * bootstrap is the degenerate fold-through-nothing), and the most
-    * negative one present wins — readers keep it plus the positive
-    * generations ABOVE its horizon, AT OR BELOW the commit-marker
-    * ceiling (round 20 — in-flight batches are invisible), and drop
-    * everything else. This is what makes a crashed compaction retire
-    * loop invisible: any leftover generation (older negative, or
-    * positive ≤ horizon) is already-folded content the filter discards,
-    * so newest-wins can never resurrect a stale row however the crash
-    * interleaved the deletes.
-    */
-  private def live(spark: SparkSession, path: String,
-      sub: String): DataFrame = {
-    val dir = s"$path/$sub"
-    val ids = genIds(spark, dir)
-    require(ids.nonEmpty,
-      s"LabelStore not initialized: no gen= directories under $dir " +
-        "(run LabelStore.init first)")
-    val bound = committedMax(spark, path)
-    val gmin = ids.min
-    val raw = spark.read.parquet(dir)
-    if (gmin >= 0) raw.filter(col("gen") <= bound)
-    else raw.filter(col("gen") === gmin ||
-      (col("gen") > -gmin - 2 && col("gen") <= bound))
-  }
-
-  /** Newest-generation-wins fold of a (keyCol, comp) generation table
+  /** Newest-generation-wins fold of a (keyCol, comp) generation frame
     * with TOMBSTONES dropped after the fold (a deleted key is absent,
-    * not −1-labeled, in every read), optionally bounded to generations
-    * strictly below `before` (the replayed-batch pre-state read; `gen`
-    * is a partition column, so the bound prunes directories at
-    * planning).
+    * not −1-labeled, in every read). A replayed batch's pre-state read
+    * bounds the frame to `gen < id` first; `gen` is a partition column,
+    * so the bound prunes directories at planning.
     */
-  private def latest(spark: SparkSession, path: String, sub: String,
-      keyCol: String, before: Option[Long]): DataFrame = {
-    val raw = live(spark, path, sub)
-    val bounded = before.fold(raw)(b => raw.filter(col("gen") < b))
-    bounded.groupBy(keyCol).agg(expr("max_by(comp, gen)").as("comp"))
+  private def latest(df: DataFrame, keyCol: String): DataFrame =
+    df.groupBy(keyCol).agg(expr("max_by(comp, gen)").as("comp"))
       .filter(col("comp") =!= Tomb)
-  }
 
   /** The stored bucketing (doc_id, key), optionally bounded below
     * `before`. NEWEST DOC-GENERATION WINS (r19, ADVICE r18 medium): a
@@ -229,36 +177,13 @@ object LabelStore {
   /** Current labels (doc_id, comp) — every LIVE doc (tombstoned docs are
     * absent until a later re-ingest resurrects them). `asOf` bounds the
     * read to generations strictly below it — generation time travel
-    * (the pre-takedown state a takedown-impact report diffs against).
+    * (the pre-takedown state a takedown-impact report diffs against),
+    * failing fast at or below the compaction horizon
+    * ([[Generations.Listing.checkAsOf]]).
     */
-  /** Audit time travel below the compaction horizon fails fast (round
-    * 20 — [[VecStore]]'s ADVICE r19 medium applies identically here):
-    * the fold generation merged everything up to the horizon, and the
-    * `gen < asOf` filter would otherwise pass the negative fold id
-    * through and serve HEAD state labeled as history. The gen=-1
-    * bootstrap is the degenerate fold-through-nothing (horizon −1), so
-    * every asOf >= 0 stays valid on an uncompacted store. Internal
-    * replay bounds (`before` in [[applyBatch]]/[[lookupLabels]]) are
-    * exempt: a replayed batch below the horizon re-reads the fold and
-    * its rewrite is invisible to readers by the horizon filter.
-    */
-  private def checkAsOfAboveHorizon(spark: SparkSession, path: String,
-      asOf: Option[Long]): Unit =
-    asOf.foreach { b =>
-      val ids = genIds(spark, s"$path/labels")
-      val horizon =
-        if (ids.nonEmpty && ids.min < 0) -ids.min - 2 else -1L
-      require(b > horizon,
-        s"asOf=$b reads below the compaction horizon ($horizon) of " +
-          s"$path/labels: the folded pre-horizon state is " +
-          "unrecoverable; keep an uncompacted store for audit reads")
-    }
-
   def readLabels(spark: SparkSession, path: String,
-      asOf: Option[Long] = None): DataFrame = {
-    checkAsOfAboveHorizon(spark, path, asOf)
-    latest(spark, path, "labels", "doc_id", asOf)
-  }
+      asOf: Option[Long] = None): DataFrame =
+    latest(live(spark, path, "labels", asOf), "doc_id")
 
   /** ONE-SCAN label snapshot (round 21 — VERDICT r20 item 7's
     * shared-snapshot device): the certificate queries (q194, q204,
@@ -273,11 +198,10 @@ object LabelStore {
     * CacheScope — the runner drains it after the query materializes, so
     * nothing persists across bench runs.
     */
-  final class Snapshot private[store] (raw: DataFrame, horizon: Long) {
+  final class Snapshot private[store] (raw: DataFrame,
+      gens: Generations.Listing) {
     private def folded(asOf: Option[Long]): DataFrame = {
-      asOf.foreach(b => require(b > horizon,
-        s"asOf=$b reads below the compaction horizon ($horizon): the " +
-          "folded pre-horizon state is unrecoverable"))
+      gens.checkAsOf(asOf)
       asOf.fold(raw)(b => raw.filter(col("gen") < b))
         .groupBy("doc_id").agg(expr("max_by(comp, gen)").as("comp"))
     }
@@ -307,9 +231,7 @@ object LabelStore {
       *         [[tombstones]] membership at that bound)
       */
     def foldedAt(bounds: Seq[Option[Long]]): DataFrame = {
-      bounds.flatten.foreach(b => require(b > horizon,
-        s"asOf=$b reads below the compaction horizon ($horizon): the " +
-          "folded pre-horizon state is unrecoverable"))
+      bounds.foreach(gens.checkAsOf)
       val aggs = bounds.zipWithIndex.map { case (b, i) =>
         val ord = b.fold(col("gen"))(x =>
           when(col("gen") < x, col("gen")))
@@ -323,16 +245,14 @@ object LabelStore {
   }
 
   def snapshot(spark: SparkSession, path: String): Snapshot = {
-    val ids = genIds(spark, s"$path/labels")
-    val horizon = if (ids.nonEmpty && ids.min < 0) -ids.min - 2 else -1L
+    val gens = Generations.list(spark, s"$path/labels", Some(path))
     new Snapshot(graft.ops.CacheScope.persisted(
-      live(spark, path, "labels").select("doc_id", "comp", "gen")),
-      horizon)
+      open(spark, gens).select("doc_id", "comp", "gen")), gens)
   }
 
   /** Current key index (key, comp) — live keys only. */
   def readKeyIdx(spark: SparkSession, path: String): DataFrame =
-    latest(spark, path, "keyidx", "key", None)
+    latest(live(spark, path, "keyidx"), "key")
 
   /** Doc ids currently TOMBSTONED (deleted and not since resurrected) —
     * the store's own record of what left, newest-generation-wins like
@@ -345,9 +265,7 @@ object LabelStore {
     // the point-in-time certificate's read (who was erased at t, which
     // can differ from head when later batches resurrect). Same horizon
     // fail-fast as [[readLabels]].
-    checkAsOfAboveHorizon(spark, path, asOf)
-    val raw = live(spark, path, "labels")
-    asOf.fold(raw)(b => raw.filter(col("gen") < b))
+    live(spark, path, "labels", asOf)
       .groupBy("doc_id").agg(expr("max_by(comp, gen)").as("comp"))
       .filter(col("comp") === Tomb)
       .select("doc_id")
@@ -449,18 +367,8 @@ object LabelStore {
   def maintainCdcStream(events: DataFrame, path: String,
       checkpoint: String, compactEvery: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        if (!batch.isEmpty) {
-          applyBatch(batch, id, path)
-          graft.ops.CacheScope.drain()
-          if (compactEvery > 0 && id > 0 && id % compactEvery == 0)
-            compact(batch.sparkSession, path)
-        }
-        ()
-      }
-      .start()
+    Generations.maintain(events, checkpoint, compactEvery)(
+      applyBatch(_, _, path), compact(_, path))
 
   /** One CDC batch against the on-disk state — the foreachBatch body,
     * public since r19 so the store-backed catalog queries (q192–q194)
@@ -482,14 +390,7 @@ object LabelStore {
   def applyBatch(batch: DataFrame, id: Long, path: String): Unit = {
     import graft.queries.PackRefresh.{keysOf, ccDelta, ccDecrementTouched}
     val sp = batch.sparkSession
-    // Stale-id guard (round 20 — [[VecStore.applyBatch]]'s twin): ids
-    // must be non-decreasing or a regressed batch overwrites an existing
-    // generation from a partial pre-state. Equality = crash replay.
-    val maxLive = genIds(sp, s"$path/labels").filter(_ >= 0)
-      .foldLeft(-1L)(math.max)
-    require(id >= maxLive,
-      s"batch id $id regresses below the newest live generation " +
-        s"$maxLive of $path — CDC batch ids must be non-decreasing")
+    Generations.list(sp, s"$path/labels", Some(path)).requireBatchId(id)
 
     // ---- net-effect reduction: last op per doc wins, ordered by seq
     // (del outranks add at equal seq — the legacy no-seq contract);
@@ -515,9 +416,10 @@ object LabelStore {
 
     // pre-state at gen < id: a replayed batch re-reads the same state
     // however far the stream had advanced before the crash
-    def labels0 = latest(sp, path, "labels", "doc_id", Some(id))
+    def labels0 =
+      latest(live(sp, path, "labels").filter(col("gen") < id), "doc_id")
     val keyIdx0 = graft.ops.CacheScope.persisted(
-      latest(sp, path, "keyidx", "key", Some(id)))
+      latest(live(sp, path, "keyidx").filter(col("gen") < id), "key"))
 
     // the batch's LIVE pre-state rows — a live del leaves, a live add
     // is a replacement (leaves, then re-enters with its new text).
@@ -649,29 +551,17 @@ object LabelStore {
         .write.mode("overwrite").parquet(s"$path/dockeys/gen=$id")
     // the generation exists for readers only now — one atomic marker
     // AFTER every table write (read-committed visibility, round 20)
-    markCommitted(sp, path, id)
+    Generations.markCommitted(sp, path, id)
   }
 
   /** Fold all generations into a fresh bootstrap triple — the
     * compactManifest move applied to labels: readers see identical
     * state before and after (tombstoned docs/keys are simply ABSENT
     * from the fold, and the dockeys fold keeps live docs' newest rows
-    * only); the generation count resets. Crash-safe via the horizon
-    * encoding (see [[live]]): the folded state lands in hidden staging,
-    * publishes by ONE rename to gen = −(maxLive + 2) where maxLive is
-    * the largest LIVE positive generation (strictly above the current
-    * horizon, so the new id is strictly more negative than any prior
-    * fold — collision-free even when a foreachBatch REPLAY re-appends
-    * an already-folded batch and re-triggers the cadence, the r17
-    * crash ADVICE: allocating from ALL positives could recompute an id
-    * that already exists, whose failed rename then fed the retire loop
-    * the only live fold). The publish guard
-    * ([[PartitionedStore.publish]]) aborts BEFORE anything retires, and
-    * then the superseded generations retire individually; a crash
-    * anywhere in the retire loop leaves only generations the horizon
-    * filter already ignores. When nothing live sits above the horizon
-    * (the replay-after-fold case) there is nothing to fold: the call
-    * only garbage-collects those invisible leftovers.
+    * only); the generation count resets. Crash safety, fold-id
+    * allocation and in-flight batches follow the [[Generations]]
+    * compaction protocol. The dockeys fold runs last, against the
+    * already-folded labels, to drop dead docs' key rows.
     *
     * The folds are corpus-cardinality, so they range-partition into
     * `foldFiles` files on the key — never a single task (VERDICT r17
@@ -679,67 +569,23 @@ object LabelStore {
     * multi-file generations need no reader change.
     */
   def compact(spark: SparkSession, path: String,
-      foldFiles: Int = 8): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    // fold COMMITTED generations only (round 20, [[VecStore.compact]]'s
-    // twin): an in-flight positive above the marker ceiling is invisible
-    // to the fold's readers, so folding through its id would lose its
-    // content when the replay lands it below the new horizon — it stays
-    // in place, unfolded and unretired, until its marker commits
-    val bound = committedMax(spark, path)
-    Seq("labels", "keyidx", "dockeys").foreach { sub =>
-      val dir = s"$path/$sub"
-      val ids = genIds(spark, dir)
-      if (ids.nonEmpty) {
-        val gmin = ids.min
-        val horizon = if (gmin < 0) -gmin - 2 else -1L
-        val livePos = ids.filter(g => g > horizon && g >= 0 && g <= bound)
-        val retired = ids.filter(g => g < 0 || g <= bound)
-        val p = new org.apache.hadoop.fs.Path(dir)
-        val fs = p.getFileSystem(conf)
-        if (livePos.isEmpty) {
-          // nothing new since the last fold — GC the horizon-hidden
-          // leftovers a crashed retire loop (or a replayed batch)
-          // left behind; readers never see them either way
-          retired.filter(_ != gmin).foreach(g => fs.delete(
-            new org.apache.hadoop.fs.Path(s"$dir/gen=$g"), true))
-        } else {
-          // livePos.max > horizon = −gmin−2 ⟹ gen < gmin: strictly
-          // below every existing id, so the rename target cannot exist
-          val gen = -(livePos.max + 2)
-          val (fold, partCols) = sub match {
-            case "labels" => // bucketed layout: lookups prune files
-              (bucketed(latest(spark, path, sub, "doc_id", None))
-                .repartitionByRange(foldFiles, col("bkt"), col("doc_id")),
-                Seq("bkt"))
-            case "keyidx" => // bucketed layout (r19): key probes prune
-              (kbucketed(latest(spark, path, sub, "key", None))
-                .repartitionByRange(foldFiles, col("kbkt"), col("key")),
-                Seq("kbkt"))
-            case _ => // dockeys: live docs' newest key rows, one each
-              (liveDockeys(spark, path, None)
-                .join(latest(spark, path, "labels", "doc_id", None)
-                  .select("doc_id"), Seq("doc_id"), "left_semi")
-                .repartitionByRange(foldFiles, col("doc_id")), Nil)
-          }
-          PartitionedStore.stagePublish(fs, dir,
-            s"$dir/gen=$gen", s"LabelStore.compact($sub)") { st =>
-            val w = fold.write.mode("overwrite")
-            (if (partCols.isEmpty) w else w.partitionBy(partCols: _*))
-              .parquet(st)
-          }
-          retired.foreach(g => fs.delete(
-            new org.apache.hadoop.fs.Path(s"$dir/gen=$g"), true))
-        }
-      }
-    }
-    // folded generations' markers are spent — GC them; in-flight
-    // generations never had one, ids above the bound keep theirs
-    val mp = new org.apache.hadoop.fs.Path(s"$path/_commits")
-    val mfs = mp.getFileSystem(conf)
-    if (mfs.exists(mp))
-      mfs.listStatus(mp).map(_.getPath)
-        .filter(_.getName.toLong <= bound)
-        .foreach(mfs.delete(_, false))
-  }
+      foldFiles: Int = 8): Unit =
+    Generations.compact(spark, "LabelStore.compact", Some(path))(
+      // bucketed layout: lookups prune files
+      (s"$path/labels", (st: String) =>
+        bucketed(latest(live(spark, path, "labels"), "doc_id"))
+          .repartitionByRange(foldFiles, col("bkt"), col("doc_id"))
+          .write.partitionBy("bkt").mode("overwrite").parquet(st)),
+      // bucketed layout (r19): key probes prune
+      (s"$path/keyidx", (st: String) =>
+        kbucketed(latest(live(spark, path, "keyidx"), "key"))
+          .repartitionByRange(foldFiles, col("kbkt"), col("key"))
+          .write.partitionBy("kbkt").mode("overwrite").parquet(st)),
+      // live docs' newest key rows, one each
+      (s"$path/dockeys", (st: String) =>
+        liveDockeys(spark, path, None)
+          .join(latest(live(spark, path, "labels"), "doc_id")
+            .select("doc_id"), Seq("doc_id"), "left_semi")
+          .repartitionByRange(foldFiles, col("doc_id"))
+          .write.mode("overwrite").parquet(st)))
 }

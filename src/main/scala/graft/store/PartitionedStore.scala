@@ -2,6 +2,7 @@ package graft.store
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Date-partitioned parquet layout — the 100 TB storage posture
   * (SURVEY §4.2/§6): event data laid out as `dt=YYYY-MM-DD/` directories
@@ -238,8 +239,10 @@ object PartitionedStore {
       (write: String => Unit): Unit = {
     val staging = s"$dir/.compacting-${java.util.UUID.randomUUID}"
     write(staging)
+    // NonFatal: after a fatal error the dot-prefixed staging dir stays
+    // behind, invisible to generation listings and parquet readers
     try publish(fs, staging, target, what)
-    catch { case e: Throwable =>
+    catch { case NonFatal(e) =>
       fs.delete(new org.apache.hadoop.fs.Path(staging), true)
       throw e
     }

@@ -67,34 +67,20 @@ object SketchStore {
         col("c"), col("r"), col("t")))
       .drop("v_lo") // q185's band edge; not part of the monitor surface
 
-  /** The generation ids present (cheap directory listing, no job). */
-  private def genIds(spark: SparkSession, path: String): Seq[Long] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("gen="))
-      .map(_.getPath.getName.stripPrefix("gen=").toLong)
-  }
-
-  /** Live generations with the compaction HORIZON applied: a negative
-    * generation encodes the batch id it folded through
-    * (gen = −(foldedThrough + 2)); readers keep the most negative one
-    * plus the positive generations above its horizon and drop the rest
-    * — a sketch cell must count EXACTLY once, so a crashed retire loop's
+  /** The visible generations under the [[Generations]] rule, with an
+    * unbounded ceiling: a batch is one write, so the sketch keeps no
+    * commit markers. The rule is load-bearing here beyond consistency:
+    * a sketch cell must count EXACTLY once, so a crashed retire loop's
     * leftovers (already inside the fold) must be invisible, not merely
-    * tolerated (this is stricter than [[LabelStore]]'s newest-wins fold,
-    * which only needs consistency, not uniqueness).
+    * tolerated — stricter than [[LabelStore]]'s newest-wins fold, which
+    * only needs consistency, not uniqueness.
     */
   private def live(spark: SparkSession, path: String): DataFrame = {
-    val ids = genIds(spark, path)
-    require(ids.nonEmpty,
+    val gens = Generations.list(spark, path, None)
+    require(gens.ids.nonEmpty,
       s"SketchStore not initialized: no gen= directories under $path " +
         "(stream at least one non-empty batch first)")
-    val gmin = ids.min
-    val raw = spark.read.parquet(path)
-    if (gmin >= 0) raw
-    else raw.filter(col("gen") === gmin || col("gen") > -gmin - 2)
+    gens.read(spark)
   }
 
   /** Fold all generations into ONE compacted cell — the
@@ -107,33 +93,19 @@ object SketchStore {
     * what [[graft.queries.PackScale.rankEstimates]] will report as the
     * new `bound`. Estimates may move WITHIN the widened window, never
     * outside it (spec-gated against the exact sort). Store size halves;
-    * the generation count resets; crash-safety is the
-    * [[PartitionedStore.compactManifest]] staged-rename protocol with
-    * the horizon encoding of [[live]] (the compacted generation id
-    * names what it folded, so a crashed retire loop's leftovers are
-    * filtered out rather than double-counted).
+    * the generation count resets; crash safety is the [[Generations]]
+    * compaction protocol (the fold id names what it folded, so a
+    * crashed retire loop's leftovers are filtered out rather than
+    * double-counted).
     */
-  def compact(spark: SparkSession, path: String): Unit = {
+  def compact(spark: SparkSession, path: String): Unit =
+    Generations.compact(spark, "SketchStore.compact", None)(
+      (path, (st: String) => writeFold(spark, path, st)))
+
+  /** Writes the compacted cell of every visible generation to `st`. */
+  private def writeFold(spark: SparkSession, path: String,
+      st: String): Unit = {
     import org.apache.spark.sql.expressions.Window
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(conf)
-    val ids = genIds(spark, path)
-    if (ids.isEmpty) return
-    val gmin = ids.min
-    val horizon = if (gmin < 0) -gmin - 2 else -1L
-    // only generations ABOVE the horizon are live; allocating the fold
-    // id from ALL positives could recompute an id that already exists
-    // when a replayed batch re-appends below the horizon (the r17 crash
-    // ADVICE: the failed rename then fed the retire loop the only live
-    // fold). With no live positives there is nothing to fold — just GC
-    // the horizon-hidden leftovers a crashed retire loop left behind.
-    val livePos = ids.filter(g => g > horizon && g >= 0)
-    if (livePos.isEmpty) {
-      ids.filter(_ != gmin).foreach(g => fs.delete(
-        new org.apache.hadoop.fs.Path(s"$path/gen=$g"), true))
-      return
-    }
     val sk = live(spark, path)
       .select((col("gen") * 32 + col("shard")).as("cell"),
         col("c"), col("r"), col("t"))
@@ -155,20 +127,8 @@ object SketchStore {
         Window.orderBy("cum")))
       .agg(max("g").as("g")).head().getLong(0)
     val tNew = bOld + gap + 1
-    // horizon encoding (see [[live]]): livePos.max > horizon = −gmin−2
-    // ⟹ gen < gmin — strictly more negative than any prior fold, so it
-    // wins the readers' rule the instant the rename lands AND the
-    // target cannot already exist; leftovers of a crashed retire loop
-    // are invisible, not tolerated. A failed publish aborts before the
-    // retire loop touches anything.
-    val gen = -(livePos.max + 2)
-    PartitionedStore.stagePublish(fs, path,
-      s"$path/gen=$gen", "SketchStore.compact") { st =>
-      kept.select(lit(0L).as("shard"), col("c"), col("cum").as("r"),
-        lit(tNew).as("t"))
-        .coalesce(1).write.mode("overwrite").parquet(st)
-    }
-    ids.foreach(g => fs.delete(
-      new org.apache.hadoop.fs.Path(s"$path/gen=$g"), true))
+    kept.select(lit(0L).as("shard"), col("c"), col("cum").as("r"),
+      lit(tNew).as("t"))
+      .coalesce(1).write.mode("overwrite").parquet(st)
   }
 }

@@ -43,10 +43,10 @@ import org.apache.spark.sql.functions._
   * Readers fold per vec_id by `max_by(·, (gen, live))` and keep live
   * rows — a delete hides every older add, a later re-ingest resurrects
   * the vector at its new cell; centroids fold by plain integer SUM over
-  * the delta generations. Exactly-once is [[LabelStore]]'s argument:
-  * each batch writes `gen=<batchId>` by overwrite and reads its
-  * pre-state at gen < batchId, so a replayed batch recomputes identical
-  * content. Generation growth bounds via [[compact]].
+  * the delta generations. Generations, commit markers, replay and
+  * compaction follow the [[Generations]] protocol: a replayed batch
+  * recomputes identical content from its `gen < batchId` pre-state.
+  * Generation growth bounds via [[compact]].
   */
 object VecStore {
 
@@ -67,71 +67,37 @@ object VecStore {
     transform(embedding, x =>
       floor(x.cast("double") * lit(1000000.0d)).cast("long"))
 
-  /** The generation ids present (cheap directory listing, no job). */
-  private def genIds(spark: SparkSession, dir: String): Seq[Long] = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("gen="))
-      .map(_.getPath.getName.stripPrefix("gen=").toLong)
-  }
-
-  /** READ-COMMITTED generation visibility (round 20 — VERDICT r19 next
-    * item 3): a generation becomes visible only once its commit marker
-    * `path/_commits/<id>` exists, which [[commitDelta]] creates AFTER
-    * both table writes. Without the marker bound, a reader racing the
-    * maintainer could fold a generation whose members landed but whose
-    * statistics had not (or catch the job-commit rename window of
-    * either write) — a torn batch. Markers are one empty file each,
-    * created atomically; ids are non-decreasing (enforced in
-    * [[applyBatch]]), so the newest marker IS the visibility ceiling.
-    * The one documented gap: a crash REPLAY overwrites an
-    * already-marked generation in place with identical bytes — reads
-    * during that overwrite window need the single-writer assumption,
-    * as before.
+  /** The generations of `path/sub` under the [[Generations]] protocol:
+    * a batch writes two tables (members, cstats), so positives wait for
+    * its commit marker.
     */
-  private def committedMax(spark: SparkSession, path: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/_commits")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) -1L
-    else fs.listStatus(p).foldLeft(-1L)((m, st) =>
-      math.max(m, st.getPath.getName.toLong))
-  }
+  private def gens(spark: SparkSession, path: String,
+      sub: String): Generations.Listing =
+    Generations.list(spark, s"$path/$sub", Some(path))
 
-  private def markCommitted(spark: SparkSession, path: String,
-      id: Long): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/_commits/$id")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.mkdirs(p.getParent)
-    fs.create(p, true).close()
-  }
+  /** The visible generations, or `empty` when there are none: an
+    * ABSENT table reads as empty — the first batch of a fresh store
+    * probes a pre-state that simply has no rows, so there is no
+    * separate init entry point. A fresh store whose first batch is
+    * still in flight reads as empty too, without touching the
+    * directory: schema inference over a generation with no committed
+    * files would fail, and the in-flight content must not be seen.
+    */
+  private def open(spark: SparkSession, gens: Generations.Listing,
+      empty: => DataFrame): DataFrame =
+    if (gens.anyVisible) gens.read(spark) else empty
 
-  /** Live generations with [[LabelStore]]'s compaction-horizon rule
-    * (a negative generation encodes the batch id it folded through;
-    * readers keep it plus the positives above its horizon) AND the
-    * commit-marker ceiling: positive generations above the newest
-    * marker are in-flight and invisible. An ABSENT table reads as
-    * empty — the first batch of a fresh store probes a pre-state that
-    * simply has no rows, so there is no separate init entry point.
+  /** [[open]] on `path/sub`, strictly below `asOf` when given — an AUDIT
+    * bound, failing fast at or below the compaction horizon. Internal
+    * replay bounds (`before` in [[lookupMembers]]/[[applyBatch]]) go
+    * through [[members]] unchecked.
     */
   private def live(spark: SparkSession, path: String, sub: String,
-      empty: => DataFrame): DataFrame = {
-    val dir = s"$path/$sub"
-    val ids = genIds(spark, dir)
-    val bound = if (ids.isEmpty) -1L else committedMax(spark, path)
-    // nothing visible (absent table, or a fresh store whose FIRST batch
-    // is still in flight): read as empty without touching the directory
-    // — schema inference over a generation that has no committed files
-    // yet would fail, and the in-flight content must not be seen anyway
-    if (!ids.exists(g => g < 0 || g <= bound)) empty
-    else {
-      val gmin = ids.min
-      val raw = spark.read.parquet(dir)
-      if (gmin >= 0) raw.filter(col("gen") <= bound)
-      else raw.filter(col("gen") === gmin ||
-        (col("gen") > -gmin - 2 && col("gen") <= bound))
-    }
+      empty: => DataFrame, asOf: Option[Long] = None): DataFrame = {
+    val g = gens(spark, path, sub)
+    g.checkAsOf(asOf)
+    val raw = open(spark, g, empty)
+    asOf.fold(raw)(b => raw.filter(col("gen") < b))
   }
 
   private def emptyMembers(spark: SparkSession): DataFrame =
@@ -151,31 +117,6 @@ object VecStore {
     before.fold(raw)(b => raw.filter(col("gen") < b))
   }
 
-  /** Fail fast when an AUDIT time-travel bound reaches below the
-    * compaction horizon (round 20, ADVICE r19 medium): the fold
-    * generation merged everything up to the horizon, so an `asOf` at or
-    * below it cannot be reconstructed — and silently returning the fold
-    * (which the negative generation id would otherwise pass through the
-    * `gen < asOf` filter) would hand an audit the HEAD state labeled as
-    * history. Applied at the public read entry points only; the internal
-    * replay pre-state bound (`before` in [[lookupMembers]]/
-    * [[applyBatch]]) is exempt by design — a replayed batch below the
-    * horizon legitimately re-reads the fold, and its rewrite is already
-    * invisible to readers (the horizon filter drops it).
-    */
-  private def checkAsOfAboveHorizon(spark: SparkSession, dir: String,
-      asOf: Option[Long]): Unit =
-    asOf.foreach { b =>
-      val ids = genIds(spark, dir)
-      val horizon =
-        if (ids.nonEmpty && ids.min < 0) -ids.min - 2 else -1L
-      require(b > horizon,
-        s"asOf=$b reads below the compaction horizon ($horizon) of " +
-          s"$dir: generations <= $horizon were folded and the " +
-          "pre-horizon state is unrecoverable; keep an uncompacted " +
-          "store (or raise the compaction cadence) for audit reads")
-    }
-
   /** Newest-wins live fold of a member frame (already generation- and
     * possibly cell-bounded). Same-generation tombstone+add pairs (a
     * replacement) resolve live-wins via the (gen, live) key.
@@ -193,10 +134,8 @@ object VecStore {
     * travel, [[LabelStore.readLabels]]'s contract).
     */
   def readMembers(spark: SparkSession, path: String,
-      asOf: Option[Long] = None): DataFrame = {
-    checkAsOfAboveHorizon(spark, s"$path/members", asOf)
-    foldMembers(members(spark, path, asOf))
-  }
+      asOf: Option[Long] = None): DataFrame =
+    foldMembers(live(spark, path, "members", emptyMembers(spark), asOf))
 
   /** Live vectors of the given CELLS only — the serving read: the cell
     * predicate is a PARTITION filter (one cell= subtree per
@@ -204,11 +143,9 @@ object VecStore {
     * the cell-bounded fold exact.
     */
   def readMembersInCells(spark: SparkSession, path: String,
-      cells: Seq[Int], asOf: Option[Long] = None): DataFrame = {
-    checkAsOfAboveHorizon(spark, s"$path/members", asOf)
-    foldMembers(members(spark, path, asOf)
+      cells: Seq[Int], asOf: Option[Long] = None): DataFrame =
+    foldMembers(live(spark, path, "members", emptyMembers(spark), asOf)
       .filter(col("cell").isin(cells.distinct: _*)))
-  }
 
   /** ONE-SCAN member-presence snapshot WITHOUT the embedding payload
     * (round 21 — VERDICT r20 item 7's shared-snapshot device): the
@@ -224,14 +161,13 @@ object VecStore {
     * Scoped via CacheScope — the runner drains it after the query
     * materializes, nothing persists across bench runs.
     */
-  final class CellSnapshot private[store] (raw: DataFrame, horizon: Long) {
+  final class CellSnapshot private[store] (raw: DataFrame,
+      gens: Generations.Listing) {
     /** (vec_id, cell) of every live vector, optionally as of a
       * generation bound — [[readMembers]] minus the embedding column.
       */
     def cells(asOf: Option[Long] = None): DataFrame = {
-      asOf.foreach(b => require(b > horizon,
-        s"asOf=$b reads below the compaction horizon ($horizon): the " +
-          "folded pre-horizon state is unrecoverable"))
+      gens.checkAsOf(asOf)
       asOf.fold(raw)(b => raw.filter(col("gen") < b))
         .groupBy("vec_id")
         .agg(expr("max_by(struct(cell, live), struct(gen, live))").as("v"))
@@ -255,9 +191,7 @@ object VecStore {
       *         or absent at that bound)
       */
     def cellsAt(bounds: Seq[Option[Long]]): DataFrame = {
-      bounds.flatten.foreach(b => require(b > horizon,
-        s"asOf=$b reads below the compaction horizon ($horizon): the " +
-          "folded pre-horizon state is unrecoverable"))
+      bounds.foreach(gens.checkAsOf)
       val aggs = bounds.zipWithIndex.map { case (b, i) =>
         val ord = b.fold(struct(col("gen"), col("live")))(x =>
           when(col("gen") < x, struct(col("gen"), col("live"))))
@@ -270,11 +204,10 @@ object VecStore {
   }
 
   def cellSnapshot(spark: SparkSession, path: String): CellSnapshot = {
-    val ids = genIds(spark, s"$path/members")
-    val horizon = if (ids.nonEmpty && ids.min < 0) -ids.min - 2 else -1L
+    val g = gens(spark, path, "members")
     new CellSnapshot(graft.ops.CacheScope.persisted(
-      live(spark, path, "members", emptyMembers(spark))
-        .select("vec_id", "cell", "gen", "live")), horizon)
+      open(spark, g, emptyMembers(spark))
+        .select("vec_id", "cell", "gen", "live")), g)
   }
 
   /** POINT lookup — the unlearning audit's read: bkt isin literals are
@@ -299,9 +232,7 @@ object VecStore {
     */
   def readCentroids(spark: SparkSession, path: String,
       asOf: Option[Long] = None): DataFrame = {
-    checkAsOfAboveHorizon(spark, s"$path/cstats", asOf)
-    val raw = live(spark, path, "cstats", emptyCstats(spark))
-    val bounded = asOf.fold(raw)(b => raw.filter(col("gen") < b))
+    val bounded = live(spark, path, "cstats", emptyCstats(spark), asOf)
     // ONE map-side-combined aggregation (round 21): the r19 form
     // posexploded the delta arrays to (cell, pos) rows, re-grouped them
     // into per-cell arrays, and joined a separate member-count fold —
@@ -340,17 +271,7 @@ object VecStore {
     */
   def applyBatch(batch: DataFrame, id: Long, path: String): Unit = {
     val sp = batch.sparkSession
-    // Stale-id guard (round 20, ADVICE r19 low): the batch-id contract —
-    // each generation's pre-state is `gen < id` — only holds when ids
-    // never regress; a stale id would overwrite an EXISTING generation
-    // with content computed from a partial pre-state, silently corrupting
-    // both members and cstats. Equality stays legal: it is exactly the
-    // crash-replay case (same pre-state, identical rewrite).
-    val maxLive = genIds(sp, s"$path/members").filter(_ >= 0)
-      .foldLeft(-1L)(math.max)
-    require(id >= maxLive,
-      s"batch id $id regresses below the newest live generation " +
-        s"$maxLive of $path — CDC batch ids must be non-decreasing")
+    gens(sp, path, "members").requireBatchId(id)
     val seqCol =
       if (batch.columns.contains("seq")) col("seq").cast("long")
       else lit(0L)
@@ -368,7 +289,7 @@ object VecStore {
     // Empty-batch guard (round 20, ADVICE r19 low): the streaming
     // maintainer already skips empty micro-batches, but a direct caller
     // with an empty frame would otherwise register a spurious empty
-    // generation pair that shifts genIds/compaction bookkeeping for
+    // generation pair that shifts the compaction bookkeeping for
     // nothing.
     if (net.isEmpty) return
     val adds = graft.ops.CacheScope.persisted(
@@ -442,25 +363,15 @@ object VecStore {
       .write.mode("overwrite").parquet(s"$path/cstats/gen=$id")
     // the generation exists for readers only now — one atomic marker
     // AFTER both table writes (read-committed visibility, round 20)
-    markCommitted(preLive.sparkSession, path, id)
+    Generations.markCommitted(preLive.sparkSession, path, id)
   }
 
-  /** Continuous CDC maintenance — the streaming twin. */
+  /** Continuous CDC maintenance: [[applyBatch]] per micro-batch. */
   def maintainCdcStream(events: DataFrame, path: String,
       checkpoint: String, compactEvery: Int = 0)
       : org.apache.spark.sql.streaming.StreamingQuery =
-    events.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        if (!batch.isEmpty) {
-          applyBatch(batch, id, path)
-          graft.ops.CacheScope.drain()
-          if (compactEvery > 0 && id > 0 && id % compactEvery == 0)
-            compact(batch.sparkSession, path)
-        }
-        ()
-      }
-      .start()
+    Generations.maintain(events, checkpoint, compactEvery)(
+      applyBatch(_, _, path), compact(_, path))
 
   /** IVF serving off the store: probe the top `probe` cells per query
     * by centroid cosine (the folded INTEGER stats — cosine is
@@ -479,16 +390,10 @@ object VecStore {
     // ADVICE r19 low): serve reads the store TWICE (centroids to pick
     // cells, then members to score), and a batch committing between the
     // two phases would probe gen<=N centroids against gen N+1 members.
-    // Pin both reads to one generation ceiling resolved ONCE, up front:
-    // the newest COMMITTED generation (marker-derived — the same bound
-    // [[live]] applies per-read, resolved here once so the two phases
-    // agree even when a batch commits between them).
-    val bound = asOf.orElse {
-      val ids = genIds(spark, s"$path/cstats")
-      val horizon =
-        if (ids.nonEmpty && ids.min < 0) -ids.min - 2 else -1L
-      Some(math.max(committedMax(spark, path), horizon) + 1)
-    }
+    // Pin both reads to one generation ceiling resolved ONCE, up front
+    // ([[Generations.Listing.pinned]]), so the two phases agree even
+    // when a batch commits between them.
+    val bound = asOf.orElse(gens(spark, path, "cstats").pinned)
     val reps = readCentroids(spark, path, bound)
       .select(col("cell"),
         transform(col("ivec"), x => x.cast("double")).as("r_emb"))
@@ -550,7 +455,7 @@ object VecStore {
     // rebalance reads its pre-state UNBOUNDED, so re-running an id whose
     // generation half-landed would fold the partial writes into the
     // pre-state and diverge.
-    requireFreshId(spark, path, id, "rebalance")
+    gens(spark, path, "members").requireFreshId(id, "rebalance")
     val reps = readCentroids(spark, path)
       .select(col("cell").as("n_cell"),
         transform(col("ivec"), x => x.cast("double")).as("r_emb"))
@@ -577,21 +482,6 @@ object VecStore {
     nMoves
   }
 
-  /** The shared id-freshness guard for the maintenance ops that read
-    * their pre-state unbounded (rebalance, split, merge): a duplicate
-    * or stale id would overwrite an existing generation from a fold
-    * that may already include its own partial writes.
-    */
-  private def requireFreshId(spark: SparkSession, path: String,
-      id: Long, op: String): Unit = {
-    val ids = genIds(spark, s"$path/members")
-    val maxLive = ids.filter(_ >= 0).foldLeft(-1L)(math.max)
-    val horizon = if (ids.nonEmpty && ids.min < 0) -ids.min - 2 else -1L
-    require(id > maxLive && id > horizon,
-      s"$op id $id must exceed every live generation " +
-        s"(max=$maxLive, compaction horizon=$horizon) of $path")
-  }
-
   /** SPLIT one cell in two — the K-drift half of IVF maintenance
     * (round 20, §7.9 item 2 pulled forward): CDC concentrates mass —
     * a hot ingest topic lands thousands of vectors in one cell, serving
@@ -613,7 +503,7 @@ object VecStore {
   def splitCell(spark: SparkSession, path: String, cell: Int,
       newCell: Int, id: Long): Long = {
     import graft.ops.SimOps
-    requireFreshId(spark, path, id, "splitCell")
+    gens(spark, path, "members").requireFreshId(id, "splitCell")
     val mem = graft.ops.CacheScope.persisted(
       readMembersInCells(spark, path, Seq(cell)))
     // seed A: the minimum-id member (1-row collect)
@@ -652,7 +542,7 @@ object VecStore {
   def mergeCells(spark: SparkSession, path: String, from: Int,
       into: Int, id: Long): Long = {
     require(from != into, s"mergeCells: from == into ($from)")
-    requireFreshId(spark, path, id, "mergeCells")
+    gens(spark, path, "members").requireFreshId(id, "mergeCells")
     val mem = graft.ops.CacheScope.persisted(
       readMembersInCells(spark, path, Seq(from)))
     val n = mem.count()
@@ -695,66 +585,25 @@ object VecStore {
 
   /** Fold all generations into a fresh pair — members to live rows
     * only (tombstones and superseded rows drop), cstats to one net
-    * row per cell. [[LabelStore.compact]]'s crash-safety verbatim:
-    * horizon-encoded fold id allocated from the max LIVE positive,
-    * staged-rename publish, retire loop last.
+    * row per cell — by the [[Generations]] compaction protocol.
     */
   def compact(spark: SparkSession, path: String,
-      foldFiles: Int = 8): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    // fold COMMITTED generations only (round 20): an in-flight positive
-    // above the marker ceiling is invisible to the fold's readers, so
-    // folding "through" its id would lose its content when the replay
-    // lands it below the new horizon — it stays in place, unfolded and
-    // unretired, until its own marker commits
-    val bound = committedMax(spark, path)
-    Seq("members", "cstats").foreach { sub =>
-      val dir = s"$path/$sub"
-      val ids = genIds(spark, dir)
-      if (ids.nonEmpty) {
-        val gmin = ids.min
-        val horizon = if (gmin < 0) -gmin - 2 else -1L
-        val livePos = ids.filter(g => g > horizon && g >= 0 && g <= bound)
-        val retired = ids.filter(g => g < 0 || g <= bound)
-        val p = new org.apache.hadoop.fs.Path(dir)
-        val fs = p.getFileSystem(conf)
-        if (livePos.isEmpty) {
-          retired.filter(_ != gmin).foreach(g => fs.delete(
-            new org.apache.hadoop.fs.Path(s"$dir/gen=$g"), true))
-        } else {
-          val gen = -(livePos.max + 2)
-          PartitionedStore.stagePublish(fs, dir,
-            s"$dir/gen=$gen", s"VecStore.compact($sub)") { st =>
-            if (sub == "members")
-              readMembers(spark, path)
-                .select(col("vec_id"), col("embedding"),
-                  lit(true).as("live"), col("cell"),
-                  pmod(col("vec_id"), lit(Buckets.toLong)).cast("int")
-                    .as("bkt"))
-                .repartitionByRange(foldFiles, col("cell"), col("bkt"),
-                  col("vec_id"))
-                .write.partitionBy("cell", "bkt")
-                .mode("overwrite").parquet(st)
-            else
-              readCentroids(spark, path)
-                .select(col("cell"), col("n_members").as("dn"),
-                  col("ivec").as("divec"))
-                .coalesce(1)
-                .write.mode("overwrite").parquet(st)
-          }
-          retired.foreach(g => fs.delete(
-            new org.apache.hadoop.fs.Path(s"$dir/gen=$g"), true))
-        }
-      }
-    }
-    // folded generations' markers are spent — GC them (their content is
-    // visible through the horizon rule now); ids above the bound keep
-    // theirs, and in-flight generations never had one
-    val mp = new org.apache.hadoop.fs.Path(s"$path/_commits")
-    val mfs = mp.getFileSystem(conf)
-    if (mfs.exists(mp))
-      mfs.listStatus(mp).map(_.getPath)
-        .filter(_.getName.toLong <= bound)
-        .foreach(mfs.delete(_, false))
-  }
+      foldFiles: Int = 8): Unit =
+    Generations.compact(spark, "VecStore.compact", Some(path))(
+      (s"$path/members", (st: String) =>
+        readMembers(spark, path)
+          .select(col("vec_id"), col("embedding"),
+            lit(true).as("live"), col("cell"),
+            pmod(col("vec_id"), lit(Buckets.toLong)).cast("int")
+              .as("bkt"))
+          .repartitionByRange(foldFiles, col("cell"), col("bkt"),
+            col("vec_id"))
+          .write.partitionBy("cell", "bkt")
+          .mode("overwrite").parquet(st)),
+      (s"$path/cstats", (st: String) =>
+        readCentroids(spark, path)
+          .select(col("cell"), col("n_members").as("dn"),
+            col("ivec").as("divec"))
+          .coalesce(1)
+          .write.mode("overwrite").parquet(st)))
 }

@@ -54,7 +54,7 @@ class HttpFetchSpec extends SparkSpec {
       "/fkd/sf/SZ0200703.html" -> (html, fixture("scenario_2b.html")),
       "/fkd/df/DZ0200703.jpg" -> ("image/jpeg", jpeg))) { base =>
       val out = Files.createTempDirectory("httpfetch").toString
-      val res = Pipeline.run(
+      val res = Pipeline.runUrls(
         spark, Seq(s"$base/fkd/lis/cat1.html"), limit = 3, outDir = out)(
         HttpFetch.text, HttpFetch.binary)
       assert(res.total === 3)

@@ -51,7 +51,7 @@ class PipelineSpec extends SparkSpec
       s"$base/sf/SZ0200703.html" -> fixture("scenario_2b.html"))
     val out = Files.createTempDirectory("pipeline").toString
 
-    val res = Pipeline.run(
+    val res = Pipeline.runUrls(
       spark, Seq(s"$base/lis/cat1.html"), limit = 3, outDir = out)(
       u => pages.getOrElse(u, throw new java.io.IOException(s"404 $u")))
 
@@ -105,7 +105,7 @@ class PipelineSpec extends SparkSpec
       s"$base/cf/CZ0200702.html" -> fixture("case_missing.html"))
       // SZ0200703 (701's scenario) NOT served
     val out = Files.createTempDirectory("pipeline-scen-err").toString
-    val res = Pipeline.run(
+    val res = Pipeline.runUrls(
       spark, Seq(s"$base/lis/cat1.html"), limit = 2, outDir = out)(
       u => pages.getOrElse(u, throw new java.io.IOException(s"404 $u")))
     assert(res.total === 2)
@@ -129,7 +129,7 @@ class PipelineSpec extends SparkSpec
       s"$base/sf/SZ0200703.html" -> fixture("scenario_2b.html"))
     val out = Files.createTempDirectory("pipeline-err").toString
 
-    val res = Pipeline.run(
+    val res = Pipeline.runUrls(
       spark, Seq(s"$base/lis/cat1.html"), limit = 3, outDir = out)(
       u => pages.getOrElse(u, throw new java.io.IOException(s"404 $u")))
 
