@@ -1,7 +1,5 @@
 package graft.ingest
 
-import org.apache.spark.sql.functions._
-
 /** Single-case extraction entry — extract.py standalone parity
   * (/root/reference/src/extract.py:427-430): URL → `{case_id}_{case_name}
   * .json` under `--output-dir` (default `data`, extract.py:410).
@@ -9,7 +7,8 @@ import org.apache.spark.sql.functions._
   * Unlike the full pipeline, extract.py writes the JSON UNCONDITIONALLY —
   * required-field validation is run.py's concern — so excluded-grade cases
   * still produce their file here; only fetch failures (case page or
-  * scenario page, both of which raise in the reference) exit non-zero.
+  * scenario page, both of which raise in the reference) and pages with
+  * no case id exit non-zero.
   *
   * {{{ runMain graft.ingest.ExtractMain URL [--output-dir DIR] }}}
   */
@@ -40,56 +39,28 @@ object ExtractMain {
     if (code != 0) sys.exit(code)
   }
 
-  /** Testable core: returns the process exit code (0 = JSON written). */
+  /** Testable core: returns the process exit code (0 = JSON written).
+    * Runs [[Pipeline.routeCases]] on the one URL: a case or scenario page
+    * fetch failure routes to error with its message, and a fetched page
+    * with no parseable case id routes to error with none.
+    */
   def extract(spark: org.apache.spark.sql.SparkSession, url: String,
       outDir: String)(fetch: String => String): Int = {
     import spark.implicits._
-    val pages = Fetch.fetchPages(Seq(url).toDS())(fetch).cache()
-    var scenAll: org.apache.spark.sql.DataFrame = null
-    try {
-      val fetchErr = pages.filter(col("fetch_error") =!= "")
-        .select("fetch_error").as[String].collect().headOption
-      fetchErr match {
-        case Some(msg) =>
-          System.err.println(s"extract failed: $msg"); 1
-        case None =>
-          val cases = CaseParse.parseMainPages(pages)
-          val scenUrls = cases.select(col("scenario_url")).distinct()
-            .filter(col("scenario_url") =!= "").as[String]
-          scenAll = Fetch.fetchPages(scenUrls)(fetch).cache()
-          val scenErr = scenAll.filter(col("fetch_error") =!= "")
-            .select("fetch_error").as[String].collect().headOption
-          scenErr match {
-            case Some(msg) =>
-              // the reference fetches the scenario inside extract()
-              // (extract.py:284-286) — a failure there crashes the script
-              System.err.println(s"extract failed: $msg"); 1
-            case None =>
-              val routed = CaseParse.enrichAndRoute(
-                cases, scenAll.filter(col("fetch_error") === ""),
-                None, None)
-              val writable = routed.filter(col("status") =!= "error").cache()
-              try {
-                // a fetched page that is not a case page (no parseable
-                // case id) routes to error and writes nothing — the
-                // reference crashes on such input; exit non-zero, don't
-                // claim success
-                if (writable.isEmpty) {
-                  System.err.println(s"extract failed: not a case page: $url")
-                  1
-                } else {
-                  Sinks.writePerCaseJson(writable, outDir)
-                  println(s"JSON saved under $outDir")
-                  0
-                }
-              } finally writable.unpersist()
-          }
+    Pipeline.routeCases(spark, Seq(url))(fetch) { routed =>
+      routed.select("status", "message").as[(String, String)].head() match {
+        case ("error", msg) =>
+          // the reference crashes on any of the three (extract.py:284-286
+          // raises on a failed fetch; a non-case page has no case id)
+          System.err.println(
+            if (msg.nonEmpty) s"extract failed: $msg"
+            else s"extract failed: not a case page: $url")
+          1
+        case _ =>
+          Sinks.writePerCaseJson(routed.filter($"status" =!= "error"), outDir)
+          println(s"JSON saved under $outDir")
+          0
       }
-    } finally {
-      // shared-session hygiene: leaked persists pin storage memory across
-      // calls (the r2 bench spill class — see CacheScope)
-      if (scenAll != null) scenAll.unpersist()
-      pages.unpersist()
     }
   }
 }

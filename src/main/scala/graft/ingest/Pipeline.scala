@@ -7,7 +7,9 @@ import graft.ops.Lineage
 /** The reference's primary entry point (run.py:37-156) as one composed
   * Spark pipeline: list pages → case URLs (limit) → fetch → parse →
   * scenario enrich → validate/route → per-case JSON + PDF + numbered run
-  * manifest.
+  * manifest. The fetch → route part, [[routeCases]], is also the whole
+  * of [[ExtractMain]]'s ETL: both entry points route and write a case
+  * the same way.
   *
   * Boundary layout at scale (SURVEY §3.1): the only executor⇄driver
   * crossings are the seed URL frame and the 1-row manifest; fetches run
@@ -78,8 +80,8 @@ object Pipeline {
     processCases(spark, caseUrls, outDir, writePdf)(fetch, fetchBinary)
   }
 
-  /** Fetch → parse → enrich → route → sinks for a resolved case-URL set
-    * (the body of [[runUrls]]).
+  /** The sinks over [[routeCases]] for a resolved case-URL set (the body
+    * of [[runUrls]]).
     */
   private def processCases(
       spark: SparkSession,
@@ -88,14 +90,35 @@ object Pipeline {
       writePdf: Boolean)(
       fetch: String => String,
       fetchBinary: String => Array[Byte]): Result = {
-    import spark.implicits._
-
     // nothing to process → no manifest, no sequence number consumed
     // (run.py:79-81 exits before writing anything)
     if (caseUrls.isEmpty) return Result(outDir, "", 0, 0, 0, 0)
 
+    routeCases(spark, caseUrls)(fetch) { routed =>
+      Sinks.writePerCaseJson(routed.filter(col("status") === "success"), outDir)
+      if (writePdf)
+        graft.sink.PdfSink.writePdfs(
+          if (fetchBinary == null) routed else withImages(routed, fetchBinary),
+          outDir)
+      val m = Sinks.writeRunManifest(routed, outDir, wrotePdf = writePdf)
+      Result(outDir, m.file, m.total, m.success, m.excluded, m.error)
+    }
+  }
+
+  /** Fetch → parse → enrich → route: the one ETL core behind both entry
+    * points, [[runUrls]] and [[ExtractMain]]. Hands `use` the routed
+    * cases — one row per input URL occurrence, with `status`, `message`,
+    * `missing_fields` and the input position `seq` beside the document
+    * columns — as a leaf-plan frame, and releases every barrier when
+    * `use` returns or throws; `use` must not keep the frame.
+    */
+  private[ingest] def routeCases[A](
+      spark: SparkSession, caseUrls: Seq[String])(
+      fetch: String => String)(use: DataFrame => A): A = {
+    import spark.implicits._
+
     // every barrier joins `barriers` once materialized; the finally
-    // releases them, so a failure in a later barrier or in a sink still
+    // releases them, so a failure in a later barrier or in `use` still
     // frees the blocks already stored
     val barriers = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     def barrier(df: DataFrame): DataFrame = {
@@ -146,21 +169,13 @@ object Pipeline {
         .withColumn("occ", row_number().over(wOcc))
       val wRouted = org.apache.spark.sql.expressions.Window
         .partitionBy("url").orderBy("status") // duplicate rows are identical
-      // BARRIER: the three sinks and the image assembly all read the
-      // routed cases; their plans start from this leaf
-      val routed = barrier(CaseParse
+      // BARRIER: the sinks and the image assembly all read the routed
+      // cases; their plans start from this leaf
+      use(barrier(CaseParse
         .enrichAndRoute(cases, scenPages, Some(fetchErrors), Some(scenErrors))
         .withColumn("occ", row_number().over(wRouted))
         .join(seqDf, Seq("url", "occ"), "left")
-        .drop("occ"))
-
-      Sinks.writePerCaseJson(routed.filter(col("status") === "success"), outDir)
-      if (writePdf)
-        graft.sink.PdfSink.writePdfs(
-          if (fetchBinary == null) routed else withImages(routed, fetchBinary),
-          outDir)
-      val m = Sinks.writeRunManifest(routed, outDir, wrotePdf = writePdf)
-      Result(outDir, m.file, m.total, m.success, m.excluded, m.error)
+        .drop("occ")))
     } finally barriers.foreach(Lineage.release)
   }
 

@@ -1,6 +1,5 @@
 package graft.ingest
 
-import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.functions._
 
 /** Single-case PDF rendering entry — render_pdf.py standalone parity
@@ -44,12 +43,7 @@ object RenderMain {
   /** Testable core: JSON document file → PDF under `outDir`. */
   def render(spark: org.apache.spark.sql.SparkSession, path: String,
       outDir: String): Unit = {
-    // fixed schema read (the document contract, SURVEY §1) — extra JSON
-    // keys like scenario_url are ignored, absent ones come back null
-    val schema = Encoders.product[graft.schema.FailureCase].schema
-    val df = spark.read.schema(schema)
-      .option("multiLine", "true").json(path)
-      .withColumn("status", lit("success"))
-    graft.sink.PdfSink.writePdfs(df, outDir)
+    graft.sink.PdfSink.writePdfs(
+      CaseJson.read(spark, path).withColumn("status", lit("success")), outDir)
   }
 }

@@ -10,8 +10,9 @@ import org.apache.spark.sql.functions._
   * K1 honors the reference's one-file-per-case naming contract
   * `{case_id}_{case_name}.json` (extract.py:416-424, requirements.md:85-90)
   * via foreachPartition — each executor writes its own rows, nothing is
-  * collected. UTF-8 with non-ASCII preserved (`ensure_ascii=False`
-  * parity — Jackson writes raw UTF-8).
+  * collected. Each file is the declared case document
+  * ([[CaseJson.caseSchema]]). UTF-8 with non-ASCII preserved
+  * (`ensure_ascii=False` parity — Jackson writes raw UTF-8).
   *
   * K3 writes the aggregated run manifest `results_NNN.json`
   * (run.py:122-146): counts by single-pass conditional aggregation, roster
@@ -24,15 +25,16 @@ import org.apache.spark.sql.functions._
 object Sinks {
 
   /** K1 — one `{case_id}_{case_name}.json` file per row of `cases`,
-    * written under `dir` by the executors.
+    * written under `dir` by the executors. Each file is exactly the
+    * declared document: the [[CaseJson.caseSchema]] fields, in declared
+    * order (the reference's key order, SURVEY §1.2). Other columns
+    * (`status`, `missing_fields`, …) are left out; a frame missing a
+    * document field fails analysis rather than write a partial document.
     */
   def writePerCaseJson(cases: DataFrame, dir: String): Unit = {
-    val docCols = cases.columns
-      .filterNot(Set("status", "missing_fields", "lm", "fetch_error",
-        "message", "rep_img_url", "image_bytes", "image_captions", "seq"))
     val out = cases.select(
       col("case_id"), col("case_name"),
-      to_json(struct(docCols.map(col): _*)).as("js"))
+      to_json(struct(CaseJson.caseSchema.fieldNames.map(col): _*)).as("js"))
     Files.createDirectories(Paths.get(dir))
     out.foreachPartition { (it: Iterator[Row]) =>
       it.foreach { r =>

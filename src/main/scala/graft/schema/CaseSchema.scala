@@ -46,24 +46,3 @@ final case class FailureCase(
     notes: String,
     field: String,
     authors: Seq[String])
-
-/** Run-manifest record (run.py:122-146, requirements.md:45-77) — a
-  * discriminated union by `status`; variant fields empty when not
-  * applicable.
-  */
-final case class ManifestCase(
-    case_id: String,
-    case_name: String,
-    url: String,
-    status: String, // success | excluded | error
-    outputs: Seq[String],
-    missing_fields: Seq[String],
-    message: String)
-
-final case class ManifestSummary(
-    total: Long, success: Long, excluded: Long, error: Long)
-
-final case class RunManifest(
-    processed_at: String,
-    summary: ManifestSummary,
-    cases: Seq[ManifestCase])

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
-import graft.ingest.Pipeline
+import graft.ingest.{ExtractMain, Pipeline}
 
 /** Full §3.1 replay: list URL → crawl → fetch → parse → enrich →
   * validate → JSON + PDF + manifest, through the one composed entry point
@@ -372,11 +372,42 @@ class PipelineSpec extends SparkSpec
     intercept[java.io.IOException] {
       Pipeline.runUrls(spark, urls, limit = 2, outDir = notADir)(fetch)
     }
+    // ExtractMain runs the same barriers: a success, and a case whose
+    // scenario fetch fails
+    assert(ExtractMain.extract(spark, urls.head,
+      Files.createTempDirectory("extract-release").toString)(fetch) === 0)
+    assert(ExtractMain.extract(spark, urls.head,
+      Files.createTempDirectory("extract-release-err").toString)(
+      u => if (u.contains("/sf/")) throw new java.io.IOException(s"404 $u")
+      else pages(u)) === 1)
     eventually(timeout(30.seconds), interval(100.millis)) {
       assert(persistedRdds -- rddsBefore === Set.empty,
         "a barrier RDD is still persisted")
       assert(rddBlocks -- blocksBefore === Set.empty,
         "a barrier's storage blocks are still held")
     }
+  }
+
+  test("no ETL route built in src/main outside Pipeline") {
+    // both entry points run Pipeline.routeCases, so they fetch, route and
+    // write a case the same way; a second route would drift from it
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala")
+    val pipeline = root.resolve("graft/ingest/Pipeline.scala")
+    val files = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toList
+    assert(files.size > 50) // ran from the repo root
+    // a call, not the definition in CaseParse
+    val call =
+      """(?<!def )\b(enrichAndRoute|parseMainPages)\(|\bFetch\.fetchPages\(""".r
+    val hits = for {
+      p <- files if p != pipeline
+      (l, i) <- Files.readAllLines(p).asScala.zipWithIndex
+      t = l.trim
+      if !(t.startsWith("//") || t.startsWith("*") || t.startsWith("/*"))
+      if call.findFirstIn(t).isDefined
+    } yield s"$p:${i + 1}"
+    assert(hits.isEmpty,
+      hits.mkString("ETL route calls outside Pipeline: ", ", ", ""))
   }
 }

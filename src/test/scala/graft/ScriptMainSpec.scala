@@ -2,7 +2,12 @@ package graft
 
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
-import graft.ingest.{ExtractMain, RenderMain}
+import graft.ingest.{CaseJson, ExtractMain, Pipeline, RenderMain}
+
+object ScriptMainSpec {
+  /** Records executor-side page-fetch calls (local mode = same JVM). */
+  val pageFetches = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+}
 
 /** Smoke tests for the single-case script entries — extract.py:427-430 /
   * render_pdf.py:474-479 standalone parity over the fixture corpus.
@@ -73,5 +78,42 @@ class ScriptMainSpec extends SparkSpec {
       spark, s"$base/cf/CZ0299999.html", out)(fetch)
     assert(code === 1)
     assert(new java.io.File(out).list().isEmpty)
+  }
+
+  test("ExtractMain exits non-zero on a scenario fetch failure, fetching " +
+    "each page once") {
+    // the reference fetches the scenario inside extract() and raises
+    // (extract.py:284-286); SZ0200703 is not served
+    val p = pages - s"$base/sf/SZ0200703.html"
+    ScriptMainSpec.pageFetches.clear()
+    val out = Files.createTempDirectory("extract-scen-404").toString
+    val code = ExtractMain.extract(
+      spark, s"$base/cf/CZ0200701.html", out)(u => {
+        ScriptMainSpec.pageFetches.add(u)
+        p.getOrElse(u, throw new java.io.IOException(s"404 $u"))
+      })
+    assert(code === 1)
+    assert(new java.io.File(out).list().isEmpty)
+    import scala.jdk.CollectionConverters._
+    assert(ScriptMainSpec.pageFetches.asScala.toSeq.sorted === Seq(
+      s"$base/cf/CZ0200701.html", s"$base/sf/SZ0200703.html"))
+  }
+
+  test("ExtractMain and runUrls write the same declared document") {
+    val url = s"$base/cf/CZ0200701.html"
+    val extractOut = Files.createTempDirectory("one-doc-extract").toString
+    assert(ExtractMain.extract(spark, url, extractOut)(fetch) === 0)
+    val runOut = Files.createTempDirectory("one-doc-run").toString
+    val res = Pipeline.runUrls(spark, Seq(url), limit = 1, outDir = runOut,
+      writePdf = false)(fetch)
+    assert(res.success === 1)
+    val name = "CZ0200701_トンネル坑口崩落事故.json"
+    val extracted = Files.readAllBytes(Paths.get(extractOut, name))
+    val run = Files.readAllBytes(Paths.get(runOut, name))
+    assert(new String(extracted, UTF_8) === new String(run, UTF_8))
+    import scala.jdk.CollectionConverters._
+    val keys = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(extracted).fieldNames().asScala.toSeq
+    assert(keys === CaseJson.caseSchema.fieldNames.toSeq)
   }
 }
