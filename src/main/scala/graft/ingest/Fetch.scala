@@ -24,7 +24,7 @@ object Fetch {
     urls.mapPartitions { it =>
       it.map { u =>
         // NonFatal only: OOM/LinkageError fail the task rather than
-        // becoming a fetch_error row (same contract as FetchSource)
+        // becoming a fetch_error row
         try (u, fetch(u), "")
         catch { case scala.util.control.NonFatal(e) =>
           (u, "", String.valueOf(e.getMessage)) }

@@ -19,9 +19,11 @@ import graft.ops.Lineage
   * pages, the parsed cases, the fetched scenario pages and the routed
   * cases. Each is materialized once, eagerly, by
   * [[graft.ops.Lineage.truncate]], and every later plan starts from a
-  * leaf over its stored rows. So each page is fetched once per input
-  * occurrence and parsed once (the reference's shared in-memory dict,
-  * §4.1), and no two branches race to compute the same partitions. The
+  * leaf over its stored rows. The core routes each distinct case URL
+  * once, so each page is fetched and parsed once (the reference's shared
+  * in-memory dict, §4.1) and each case's files are written once; input
+  * occurrences, duplicates included, exist only in the manifest roster.
+  * No two branches race to compute the same partitions. The
   * barriers also keep the sinks' plans small: built on a `.cache()`d
   * routed frame, every sink, join and column the sinks add carried the
   * whole parse plan — 75 operators and about 18,400 expression nodes
@@ -93,6 +95,7 @@ object Pipeline {
     // nothing to process → no manifest, no sequence number consumed
     // (run.py:79-81 exits before writing anything)
     if (caseUrls.isEmpty) return Result(outDir, "", 0, 0, 0, 0)
+    import spark.implicits._
 
     routeCases(spark, caseUrls)(fetch) { routed =>
       Sinks.writePerCaseJson(routed.filter(col("status") === "success"), outDir)
@@ -100,17 +103,24 @@ object Pipeline {
         graft.sink.PdfSink.writePdfs(
           if (fetchBinary == null) routed else withImages(routed, fetchBinary),
           outDir)
-      val m = Sinks.writeRunManifest(routed, outDir, wrotePdf = writePdf)
+      // the roster lists every input occurrence in PROCESSING order
+      // (run.py:95-133 appends as it goes, without dedup): a duplicated
+      // URL's routed row joins once per occurrence, each with its input
+      // position `seq`. Tiny by the seed contract; joined, not
+      // broadcast-hinted.
+      val occurrences = caseUrls.zipWithIndex.toDF("url", "seq")
+      val m = Sinks.writeRunManifest(
+        occurrences.join(routed, "url"), outDir, wrotePdf = writePdf)
       Result(outDir, m.file, m.total, m.success, m.excluded, m.error)
     }
   }
 
   /** Fetch → parse → enrich → route: the one ETL core behind both entry
     * points, [[runUrls]] and [[ExtractMain]]. Hands `use` the routed
-    * cases — one row per input URL occurrence, with `status`, `message`,
-    * `missing_fields` and the input position `seq` beside the document
-    * columns — as a leaf-plan frame, and releases every barrier when
-    * `use` returns or throws; `use` must not keep the frame.
+    * cases — one row per distinct URL of `caseUrls`, with `status`,
+    * `message` and `missing_fields` beside the document columns — as a
+    * leaf-plan frame, and releases every barrier when `use` returns or
+    * throws; `use` must not keep the frame.
     */
   private[ingest] def routeCases[A](
       spark: SparkSession, caseUrls: Seq[String])(
@@ -128,18 +138,14 @@ object Pipeline {
     }
     try {
       // failed fetches stay in the frame: they parse from empty html and
-      // are forced onto the error route with the fetch message, so the
-      // manifest's total equals the number of crawled case URLs
-      // (run.py:114-133 parity). BARRIER: the pages feed the error list
-      // and the case parse; each URL occurrence is fetched exactly once,
-      // so a transient failure cannot route one URL differently per branch
-      val casePages = barrier(Fetch.fetchPages(caseUrls.toDS())(fetch))
-      // dropDuplicates: the same URL passed twice (legal per run.py, which
-      // appends without dedup) fails twice → two identical error rows, and
-      // the routing join would row-multiply 2x2 without the dedup
+      // are forced onto the error route with the fetch message, so every
+      // case URL reaches the roster (run.py:114-133 parity). BARRIER: the
+      // pages feed the error list and the case parse; each distinct URL
+      // is fetched exactly once, so a transient failure cannot route one
+      // URL differently per branch or per occurrence
+      val casePages = barrier(Fetch.fetchPages(caseUrls.distinct.toDS())(fetch))
       val fetchErrors = casePages.filter(col("fetch_error") =!= "")
         .select(col("url"), col("fetch_error").as("message"))
-        .dropDuplicates("url")
 
       // BARRIER: the parsed cases feed the scenario-url derivation and the
       // routing join, so each case page parses once. Each DISTINCT
@@ -156,26 +162,10 @@ object Pipeline {
           col("fetch_error").as("scen_message"))
       val scenPages = scenPagesAll.filter(col("fetch_error") === "")
 
-      // input position per url OCCURRENCE — the manifest roster must list
-      // cases in PROCESSING order (run.py:95-133 appends as it goes; r3
-      // verdict flagged the sorted roster as a byte-compare deviation). A
-      // duplicated input URL yields one routed row per occurrence, so both
-      // sides number occurrences within the url and join on (url, occ):
-      // input [A, B, A] rosters as A,B,A — not A,A,B as a first-wins map
-      // would. Tiny by the seed contract; joined, not broadcast-hinted.
-      val wOcc = org.apache.spark.sql.expressions.Window
-        .partitionBy("url").orderBy("seq")
-      val seqDf = caseUrls.zipWithIndex.toDF("url", "seq")
-        .withColumn("occ", row_number().over(wOcc))
-      val wRouted = org.apache.spark.sql.expressions.Window
-        .partitionBy("url").orderBy("status") // duplicate rows are identical
       // BARRIER: the sinks and the image assembly all read the routed
       // cases; their plans start from this leaf
       use(barrier(CaseParse
-        .enrichAndRoute(cases, scenPages, Some(fetchErrors), Some(scenErrors))
-        .withColumn("occ", row_number().over(wRouted))
-        .join(seqDf, Seq("url", "occ"), "left")
-        .drop("occ")))
+        .enrichAndRoute(cases, scenPages, Some(fetchErrors), Some(scenErrors))))
     } finally barriers.foreach(Lineage.release)
   }
 
@@ -208,9 +198,10 @@ object Pipeline {
               concat(lit("../mf/"), m.getField("id"), lit(".jpg")))
               .as("iurl"),
             m.getField("caption").as("caption")))))
-    // dropDuplicates: a duplicated successful URL puts two identical
-    // rows in succ, which would double every image page in that
-    // case's PDF after the groupBy re-collect
+    // dropDuplicates: two distinct URLs can still name one case — the
+    // case id comes from the path alone (`TextOps.caseId`), so the http
+    // and https spellings of a page share it — and would double every
+    // image page in that case's PDF after the groupBy re-collect
     val items = succ
       .select(col("case_id"), posexplode(col("img_items")))
       .toDF("case_id", "pos", "item")

@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   *
   * K3 writes the aggregated run manifest `results_NNN.json`
   * (run.py:122-146): counts by single-pass conditional aggregation, roster
-  * ordered for determinism, sequence number = max existing + 1 (A3). The
+  * in input order, sequence number = max existing + 1 (A3). The
   * one collected row is the manifest itself — the reference's only
   * driver-side object. At 100 TB the roster array would be emitted with
   * df.write.json and only the summary collected; the shape here matches
@@ -66,11 +66,10 @@ object Sinks {
     * {url, status, message}. Null struct fields vanish from to_json,
     * which is what enforces the key presence.
     *
-    * Roster order: run.py appends cases in PROCESSING order (run.py:
-    * 95-133) — when the frame carries a `seq` column (the input URL
-    * position, attached by the pipeline) the roster is ordered by it;
-    * frames without one fall back to ordering by the entry fields
-    * (deterministic either way — collect_list alone is not).
+    * `routed` holds one row per input URL occurrence, with its input
+    * position in `seq`. Roster order: run.py appends cases in PROCESSING
+    * order (run.py:95-133), so the roster is ordered by `seq`
+    * (collect_list alone is not deterministic).
     */
   def writeRunManifest(routed: DataFrame, dir: String,
       wrotePdf: Boolean): Manifest = {
@@ -88,12 +87,9 @@ object Sinks {
         .as("missing_fields"),
       when(col("status") === "error", col("message")).as("message"),
       when(col("status") === "success", outputs).as("outputs"))
-    val roster =
-      if (routed.columns.contains("seq"))
-        to_json(transform(
-          sort_array(collect_list(struct(col("seq").as("k"), entry.as("e")))),
-          x => x.getField("e")))
-      else to_json(sort_array(collect_list(entry)))
+    val roster = to_json(transform(
+      sort_array(collect_list(struct(col("seq").as("k"), entry.as("e")))),
+      x => x.getField("e")))
     val row = routed
       .agg(
         count(lit(1)).as("total"),

@@ -197,7 +197,10 @@ class IngestSpec extends SparkSpec {
     val dir = Files.createTempDirectory("k3").toString
     Files.write(Paths.get(dir, "results_007.json"), "{}".getBytes(UTF_8))
     Files.write(Paths.get(dir, "notes.txt"), "x".getBytes(UTF_8))
-    val name = Sinks.writeManifest(routed, dir)
+    // the pipeline attaches each input occurrence's position as `seq`
+    val seq = Seq(s"$base/cf/CZ0200703.html", s"$base/cf/CZ0200704.html",
+      s"$base/nocase/x.html").zipWithIndex.toDF("url", "seq")
+    val name = Sinks.writeManifest(routed.join(seq, "url"), dir)
     assert(name === "results_008.json")
     val js = new String(Files.readAllBytes(Paths.get(dir, name)), UTF_8)
     assert(js.contains("\"total\":3"))

@@ -224,7 +224,8 @@ class PipelineSpec extends SparkSpec
 
   test("a duplicated successful URL rosters once per occurrence, in order") {
     // run.py appends each occurrence as it processes it: [703, 701, 703]
-    // rosters as 703, 701, 703 — not first-wins-collapsed to 703, 703, 701
+    // rosters as 703, 701, 703 — not first-wins-collapsed to 703, 703, 701;
+    // the case itself is rendered once, so no two tasks write one file
     val pages: Map[String, String] = Map(
       s"$base/cf/CZ0200701.html" -> fixture("case_full.html"),
       s"$base/cf/CZ0200703.html" -> fixture("case_full.html"),
@@ -243,25 +244,37 @@ class PipelineSpec extends SparkSpec
       .findAllMatchIn(manifest).map(_.group(1)).toSeq
     assert(occurrences === Seq("03", "01", "03"),
       s"roster must follow occurrence order:\n$manifest")
+    val written = new java.io.File(out).list().toSeq
+      .filterNot(_ == res.manifestFile)
+    for (ext <- Seq(".json", ".pdf"))
+      assert(written.filter(_.endsWith(ext)).map(_.take(9)).sorted ===
+        Seq("CZ0200701", "CZ0200703"), s"one $ext per distinct success: $written")
   }
 
   test("a duplicated failing URL does not row-multiply the roster") {
-    // run.py appends duplicate URLs without dedup and processes each once
-    // per occurrence — 2 entries, not 2x2 from a self-multiplying join
+    // run.py appends duplicate URLs without dedup — 2 entries, not 2x2
+    // from a self-multiplying join — but the page is fetched only once
     val pages: Map[String, String] = Map(
       s"$base/lis/ignored.html" -> "")
+    PipelineSpec.pageFetches.clear()
     val out = Files.createTempDirectory("pipeline-dup").toString
     val res = Pipeline.runUrls(
       spark,
       Seq(s"$base/cf/CZ0200788.html", s"$base/cf/CZ0200788.html"),
       limit = 10, outDir = out)(
-      u => pages.getOrElse(u, throw new java.io.IOException(s"404 $u")))
+      u => {
+        PipelineSpec.pageFetches.add(u)
+        pages.getOrElse(u, throw new java.io.IOException(s"404 $u"))
+      })
     assert(res.total === 2, s"expected 2 roster entries, got ${res.total}")
     assert(res.error === 2)
+    import scala.jdk.CollectionConverters._
+    assert(PipelineSpec.pageFetches.asScala.toSeq ===
+      Seq(s"$base/cf/CZ0200788.html"))
   }
 
-  test("fetch-once: each case URL once per occurrence, each scenario and " +
-    "image URL once") {
+  test("fetch-once: each case, scenario and image URL once, duplicated " +
+    "inputs included") {
     // [703, 701, 703]: a duplicated case URL, and two cases sharing one
     // scenario page — counted over the whole run, across every branch
     val pages = sharedScenarioPages
@@ -284,7 +297,7 @@ class PipelineSpec extends SparkSpec
     val pageCounts = PipelineSpec.pageFetches.asScala.toSeq
       .groupBy(identity).map { case (u, us) => u -> us.size }
     assert(pageCounts === Map(
-      s"$base/cf/CZ0200703.html" -> 2,
+      s"$base/cf/CZ0200703.html" -> 1,
       s"$base/cf/CZ0200701.html" -> 1,
       s"$base/sf/SZ0200703.html" -> 1))
     assert(PipelineSpec.binaryFetches.asScala.toSeq.sorted === Seq(
