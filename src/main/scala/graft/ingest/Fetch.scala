@@ -14,14 +14,28 @@ import org.apache.spark.sql.{DataFrame, Dataset}
   * files) and deployable (an HTTP client with pooling + timeout) without
   * code changes. It must be serializable — construct per-partition state
   * inside `mapPartitions` in a real client.
+  *
+  * Partitioning: both fetchers spread their URLs round-robin over the
+  * session's `defaultParallelism` before the fetch. A URL row is a few
+  * bytes but costs a round-trip, so byte-sized partitions are the wrong
+  * unit: AQE coalesces the small shuffle in front of a fetch (the
+  * `distinct()` of the scenario and image URLs) into one partition, and
+  * the fetches then run one at a time in one task. A
+  * `repartition(n)` shuffle is never coalesced. It is not hashed on the
+  * URL: above `distinct()`'s identical hash partitioning the planner
+  * drops a `repartition(n, url)`, and AQE coalesces again.
   */
 object Fetch {
+
+  /** `urls` spread round-robin over the session's parallelism. */
+  private def spread(urls: Dataset[String]): Dataset[String] =
+    urls.repartition(urls.sparkSession.sparkContext.defaultParallelism)
 
   /** Text pages: urls → (url, html, fetch_error); html is "" on failure. */
   def fetchPages(urls: Dataset[String])(fetch: String => String): DataFrame = {
     val spark = urls.sparkSession
     import spark.implicits._
-    urls.mapPartitions { it =>
+    spread(urls).mapPartitions { it =>
       it.map { u =>
         // NonFatal only: OOM/LinkageError fail the task rather than
         // becoming a fetch_error row
@@ -40,7 +54,7 @@ object Fetch {
       fetch: String => Array[Byte]): DataFrame = {
     val spark = urls.sparkSession
     import spark.implicits._
-    urls.mapPartitions { it =>
+    spread(urls).mapPartitions { it =>
       it.map { u =>
         try (u, fetch(u), "")
         catch { case scala.util.control.NonFatal(e) =>

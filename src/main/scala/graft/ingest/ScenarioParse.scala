@@ -44,13 +44,14 @@ object ScenarioParse {
     // `b.find_parent("tr")` (extract.py:310) / `img.find_parent("tr")`
     // (:324), and on the real page shapes every <b>N.</b> and separator
     // image sits in a leaf row; outer layout rows must not swallow them.
-    val rows = filter(tableRows(mainTd), r =>
+    val rowsOf = filter(tableRows(mainTd), r =>
       !exists(r.getField("cells"), c => lower(c).contains("<table")))
     def body(r: Column) = array_join(r.getField("cells"), "\n")
+    val rows = col("rows")
 
     // numbered items: <b>N.</b> rows, item text from the 3rd td
     // (extract.py:303-315); sorted by number (O1)
-    val items = transform(
+    val itemsOf = transform(
       array_sort(filter(
         transform(rows, r => struct(
           TextOps.nullIfEmpty(
@@ -64,13 +65,15 @@ object ScenarioParse {
 
     // double-line boundaries from space.gif width: idx=(w-15)//20,
     // item_after=(idx+1)*3 (extract.py:330-341)
-    val boundaries = array_sort(transform(
+    val boundariesOf = array_sort(transform(
       filter(rows, r =>
         body(r).contains("sinario_line_2") &&
           regexp_extract(body(r), spaceW, 1) =!= ""),
       r => ((((regexp_extract(body(r), spaceW, 1).cast("int") - 15) / lit(20))
         .cast("int")) + 1) * 3))
 
+    val items = col("items")
+    val boundaries = col("boundaries")
     val nb = size(boundaries)
     val b1 = element_at(boundaries, 1)
     val b2 = element_at(boundaries, 2)
@@ -84,12 +87,20 @@ object ScenarioParse {
       .when(nb === 1, slice(items, b1 + 1, greatest(n - b1, lit(0))))
       .otherwise(array().cast("array<string>"))
 
-    pages.select(
-      col("url").as("scenario_url"),
-      struct(
-        chunk3(cause).as("cause"),
-        chunk3(action).as("action"),
-        chunk3(result).as("result")).as("scenario"))
+    // three selects, so `rows`, `items` and `boundaries` are each
+    // evaluated once per page. Inlined at every use, lambda bodies
+    // included (where no subexpression is shared), they put 57 copies of
+    // the tokenizer in one plan; the optimizer does not collapse a select
+    // into one that reads a costly column more than once
+    pages
+      .select(col("url"), rowsOf.as("rows"))
+      .select(col("url"), itemsOf.as("items"), boundariesOf.as("boundaries"))
+      .select(
+        col("url").as("scenario_url"),
+        struct(
+          chunk3(cause).as("cause"),
+          chunk3(action).as("action"),
+          chunk3(result).as("result")).as("scenario"))
   }
 
   /** The empty scenario (missing link — extract.py:215). */

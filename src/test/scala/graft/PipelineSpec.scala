@@ -13,6 +13,9 @@ object PipelineSpec {
   val binaryFetches = new java.util.concurrent.ConcurrentLinkedQueue[String]()
   /** Records executor-side page-fetch calls, likewise. */
   val pageFetches = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  /** Records (url, partition id) of every fetch, text and binary. */
+  val fetchTasks =
+    new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]()
 }
 
 class PipelineSpec extends SparkSpec
@@ -309,7 +312,9 @@ class PipelineSpec extends SparkSpec
   test("every sink plans from a leaf: analyzed sink plans stay under " +
     "2,000 expression nodes") {
     // with the routed frame merely cached, each sink's analyzed plan
-    // carried the whole parse (about 18,400 expression nodes)
+    // carried the whole parse (about 18,400 expression nodes); the routed
+    // barrier's own plan, checked too, carried 7,334 while the scenario
+    // parse inlined its intermediates at every use
     import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
     import org.apache.spark.sql.execution.QueryExecution
     def exprNodes(p: LogicalPlan): Int = p.collectWithSubqueries {
@@ -331,6 +336,9 @@ class PipelineSpec extends SparkSpec
           case "foreachPartition" if hasAttr(p, "image_captions") =>
             Some("pdf")
           case "head" if hasAttr(p, "excluded", "cases") => Some("manifest")
+          case "localCheckpoint"
+              if p.output.exists(_.name == "missing_fields") =>
+            Some("routed")
           case _ => None
         }
         sink.foreach(s => seen.add(s -> exprNodes(p)))
@@ -354,12 +362,112 @@ class PipelineSpec extends SparkSpec
       // listener events arrive asynchronously
       eventually(timeout(30.seconds), interval(100.millis)) {
         assert(seen.asScala.map(_._1).toSet ===
-          Set("json", "pdf", "manifest"))
+          Set("json", "pdf", "manifest", "routed"))
       }
       seen.asScala.foreach { case (sink, n) =>
         assert(n < 2000, s"$sink sink's analyzed plan has $n expression nodes")
       }
     } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("the http and https spellings of one case write one whole file " +
+    "of each kind") {
+    // the case id comes from the path alone, so both spellings route as
+    // successes named CZ0200701_<name>; the sinks must not write that
+    // path from two tasks at once
+    val https = s"$base/cf/CZ0200701.html"
+    val http = https.replaceFirst("^https:", "http:")
+    val pages = sharedScenarioPages
+    val jpeg = this.jpeg
+    val fetch: String => String = u =>
+      pages.getOrElse(u.replaceFirst("^http:", "https:"),
+        throw new java.io.IOException(s"404 $u"))
+    def run(urls: Seq[String]): (Pipeline.Result, String) = {
+      val out = Files.createTempDirectory("pipeline-spellings").toString
+      (Pipeline.runUrls(spark, urls, limit = 2, outDir = out)(
+        fetch, _ => jpeg), out)
+    }
+    def files(out: String, ext: String): Seq[Array[Byte]] =
+      new java.io.File(out).list().toSeq.sorted
+        .filter(n => n.endsWith(ext) && !n.startsWith("results_"))
+        .map(n => Files.readAllBytes(Paths.get(out, n)))
+
+    val (res, out) = run(Seq(https, http))
+    assert(res.success === 2)
+    val json = files(out, ".json")
+    val pdf = files(out, ".pdf")
+    assert(json.size === 1 && pdf.size === 1)
+    new com.fasterxml.jackson.databind.ObjectMapper().readTree(json.head)
+    // each row's own documents, written by a run over that spelling alone
+    val alone = Seq(https, http).map(u => run(Seq(u))._2)
+    assert(alone.exists(o => files(o, ".json").head.sameElements(json.head)),
+      s"the JSON is not one row's document: ${new String(json.head, UTF_8)}")
+    assert(alone.exists(o => files(o, ".pdf").head.sameElements(pdf.head)),
+      "the PDF is not one row's document")
+  }
+
+  test("the scenario fetch, the image fetch and the PDF render each run " +
+    "in more than one task") {
+    // ten cases with their own scenario pages and images; AQE is on, and
+    // sized by bytes it would merge each of these stages into one task
+    val ids = (1 to 10).map(i => f"02008$i%02d")
+    val caseHtml = fixture("case_full.html")
+    val scenHtml = fixture("scenario_2b.html")
+    val pages: Map[String, String] = ids.flatMap(id => Seq(
+      s"$base/cf/CZ$id.html" -> caseHtml.replace("0200703", id),
+      s"$base/sf/SZ$id.html" -> scenHtml)).toMap
+    val jpeg = this.jpeg
+    val task: String => Unit = u => PipelineSpec.fetchTasks.add(
+      u -> org.apache.spark.TaskContext.get.partitionId)
+    // (stage, partition) of each PDF render task that read a row: a task
+    // of a stage called from PdfSink that reads rows (from a shuffle or
+    // a stored barrier) and writes no shuffle, so it rendered them
+    val renderTasks =
+      new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int)]()
+    val pdfStages = new java.util.concurrent.ConcurrentHashMap[Int, Unit]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      import org.apache.spark.scheduler._
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (e.stageInfo.name.contains("PdfSink.scala"))
+          pdfStages.put(e.stageInfo.stageId, ())
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
+        val m = e.taskMetrics
+        if (pdfStages.containsKey(e.stageId) && m != null &&
+            m.shuffleReadMetrics.recordsRead + m.inputMetrics.recordsRead > 0 &&
+            m.shuffleWriteMetrics.recordsWritten == 0)
+          renderTasks.add(e.stageId -> e.taskInfo.index)
+      }
+    }
+    PipelineSpec.fetchTasks.clear()
+    val out = Files.createTempDirectory("pipeline-parallel").toString
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val res = Pipeline.runUrls(
+        spark, ids.map(id => s"$base/cf/CZ$id.html"), limit = 10,
+        outDir = out)(
+        u => {
+          task(u)
+          pages.getOrElse(u, throw new java.io.IOException(s"404 $u"))
+        },
+        u => { task(u); jpeg })
+      assert(res.success === 10)
+      import scala.jdk.CollectionConverters._
+      val fetched = PipelineSpec.fetchTasks.asScala.toSeq
+      // (distinct URLs, tasks) per fetch
+      val Seq(scen, img) = Seq("/sf/", "/mf/").map { kind =>
+        val mine = fetched.filter(_._1.contains(kind))
+        (mine.map(_._1).distinct.size, mine.map(_._2).distinct.size)
+      }
+      assert(scen._1 >= 8 && img._1 >= 8, s"URLs fetched: $fetched")
+      // listener events arrive asynchronously
+      eventually(timeout(30.seconds), interval(100.millis)) {
+        val render = renderTasks.asScala.toSeq.groupBy(_._1).values
+          .map(_.map(_._2).distinct.size).maxOption.getOrElse(0)
+        assert(scen._2 > 1 && img._2 > 1 && render > 1,
+          s"tasks: scenario fetch ${scen._2}, image fetch ${img._2}, " +
+            s"PDF render $render")
+      }
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("barriers are released after a run and after a failing sink") {

@@ -74,6 +74,19 @@ class ScenarioBranchSpec extends SparkSpec {
     assert(cat(sc, "result") === Seq.empty)
   }
 
+  test("the tokenizer runs once per page: one html_table_rows in the plan") {
+    // rows, items and boundaries are separate selects; inlined at every
+    // use, the analyzed plan held 57 copies of the tokenizer
+    val plan = ScenarioParse
+      .parse(Seq(("u", page(items(1)))).toDF("url", "html"))
+      .queryExecution.analyzed
+    val tokenizers = plan.collect { case n =>
+      n.expressions
+        .map(_.collect { case e: graft.expr.HtmlTableRows => e }.size).sum
+    }.sum
+    assert(tokenizers === 1)
+  }
+
   test("items sort by number regardless of document order (O1)") {
     val shuffled =
       s"""<tr><td><b>2.</b></td><td></td><td>項目2</td></tr>
