@@ -1,6 +1,7 @@
 package graft.ingest
 
 import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 
 /** S1/S3 — executor-side fetch (SURVEY.md §2.1).
   *
@@ -16,20 +17,23 @@ import org.apache.spark.sql.{DataFrame, Dataset}
   * inside `mapPartitions` in a real client.
   *
   * Partitioning: both fetchers spread their URLs round-robin over the
-  * session's `defaultParallelism` before the fetch. A URL row is a few
-  * bytes but costs a round-trip, so byte-sized partitions are the wrong
-  * unit: AQE coalesces the small shuffle in front of a fetch (the
-  * `distinct()` of the scenario and image URLs) into one partition, and
-  * the fetches then run one at a time in one task. A
+  * session's `defaultParallelism` before the fetch ([[spread]]). A URL
+  * row is a few bytes but costs a round-trip, so byte-sized partitions
+  * are the wrong unit: AQE coalesces the small shuffle in front of a
+  * fetch (the `distinct()` of the scenario and image URLs) into one
+  * partition, and the fetches then run one at a time in one task. A
   * `repartition(n)` shuffle is never coalesced. It is not hashed on the
   * URL: above `distinct()`'s identical hash partitioning the planner
-  * drops a `repartition(n, url)`, and AQE coalesces again.
+  * drops a `repartition(n, url)`, and AQE coalesces again. A local seed
+  * (`Seq(...).toDS()`: the case URLs, a lone list URL) is left as it is:
+  * its scan already splits it over `min(rows, defaultParallelism)` tasks.
   */
 object Fetch {
 
-  /** `urls` spread round-robin over the session's parallelism. */
-  private def spread(urls: Dataset[String]): Dataset[String] =
-    urls.repartition(urls.sparkSession.sparkContext.defaultParallelism)
+  /** `rows` round-robin over the session's parallelism; a local seed as is. */
+  private[graft] def spread[T](rows: Dataset[T]): Dataset[T] =
+    if (rows.queryExecution.analyzed.isInstanceOf[LocalRelation]) rows
+    else rows.repartition(rows.sparkSession.sparkContext.defaultParallelism)
 
   /** Text pages: urls → (url, html, fetch_error); html is "" on failure. */
   def fetchPages(urls: Dataset[String])(fetch: String => String): DataFrame = {

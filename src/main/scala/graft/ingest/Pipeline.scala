@@ -19,12 +19,7 @@ import graft.ops.Lineage
   * pages, the parsed cases, the fetched scenario pages and the routed
   * cases. Each is materialized once, eagerly, by
   * [[graft.ops.Lineage.truncate]], and every later plan starts from a
-  * leaf over its stored rows. The core routes each distinct case URL
-  * once, so each page is fetched and parsed once (the reference's shared
-  * in-memory dict, §4.1) and each case URL's files are written once
-  * (the http and https spellings of one page name one file; the sinks
-  * partition on the file name, so one task writes it); input
-  * occurrences, duplicates included, exist only in the manifest roster.
+  * leaf over its stored rows.
   * No two branches race to compute the same partitions. The
   * barriers also keep the sinks' plans small: built on a `.cache()`d
   * routed frame, every sink, join and column the sinks add carried the
@@ -37,6 +32,14 @@ import graft.ops.Lineage
   * once per page in three selects, 544 analyzed expression nodes (6,964
   * with each inlined at every use), and the barrier's 914 in all
   * (7,334 with the inlined parse).
+  *
+  * Routing unit: the case key — the URL's case id (`TextOps.caseId`), or
+  * the URL itself when it has none. The core routes one URL per key, its
+  * last occurrence: the reference processes its inputs in order
+  * (run.py:95-133), so of the http and https spellings of one case page
+  * the later one's files are left on disk. Each case page is fetched,
+  * parsed and written once (§4.1), and no two rows name one file; input
+  * occurrences exist only in the manifest roster, each with its own URL.
   */
 object Pipeline {
 
@@ -104,6 +107,7 @@ object Pipeline {
     if (caseUrls.isEmpty) return Result(outDir, "", 0, 0, 0, 0)
     import spark.implicits._
 
+    val routedUrl = routedUrls(caseUrls)
     routeCases(spark, caseUrls)(fetch) { routed =>
       Sinks.writePerCaseJson(routed.filter(col("status") === "success"), outDir)
       if (writePdf)
@@ -111,20 +115,29 @@ object Pipeline {
           if (fetchBinary == null) routed else withImages(routed, fetchBinary),
           outDir)
       // the roster lists every input occurrence in PROCESSING order
-      // (run.py:95-133 appends as it goes, without dedup): a duplicated
-      // URL's routed row joins once per occurrence, each with its input
-      // position `seq`. Tiny by the seed contract; joined, not
-      // broadcast-hinted.
-      val occurrences = caseUrls.zipWithIndex.toDF("url", "seq")
-      val m = Sinks.writeRunManifest(
-        occurrences.join(routed, "url"), outDir, wrotePdf = writePdf)
+      // (run.py:95-133 appends as it goes, without dedup): a case's routed
+      // row joins once per occurrence of its key, each with the
+      // occurrence's own URL and input position `seq`. Tiny by the seed
+      // contract; joined, not broadcast-hinted.
+      val occurrences = caseUrls.zipWithIndex
+        .map { case (u, i) => (u, i, routedUrl(u)) }.toDF("url", "seq", "key")
+      val m = Sinks.writeRunManifest(occurrences.join(
+        routed.withColumnRenamed("url", "key"), "key"), outDir, writePdf)
       Result(outDir, m.file, m.total, m.success, m.excluded, m.error)
     }
   }
 
+  /** Each URL of `caseUrls` → the URL routed for its case key. */
+  private def routedUrls(caseUrls: Seq[String]): Map[String, String] = {
+    val caseId = graft.ops.TextOps.caseIdPattern.r
+    def key(u: String) = caseId.findFirstMatchIn(u).fold(u)(_.group(1))
+    val last = caseUrls.map(u => key(u) -> u).toMap // a key's last pair wins
+    caseUrls.map(u => u -> last(key(u))).toMap
+  }
+
   /** Fetch → parse → enrich → route: the one ETL core behind both entry
     * points, [[runUrls]] and [[ExtractMain]]. Hands `use` the routed
-    * cases — one row per distinct URL of `caseUrls`, with `status`,
+    * cases — one row per case key of `caseUrls`, with `status`,
     * `message` and `missing_fields` beside the document columns — as a
     * leaf-plan frame, and releases every barrier when `use` returns or
     * throws; `use` must not keep the frame.
@@ -147,10 +160,11 @@ object Pipeline {
       // failed fetches stay in the frame: they parse from empty html and
       // are forced onto the error route with the fetch message, so every
       // case URL reaches the roster (run.py:114-133 parity). BARRIER: the
-      // pages feed the error list and the case parse; each distinct URL
+      // pages feed the error list and the case parse; each case key's URL
       // is fetched exactly once, so a transient failure cannot route one
-      // URL differently per branch or per occurrence
-      val casePages = barrier(Fetch.fetchPages(caseUrls.distinct.toDS())(fetch))
+      // case differently per branch or per occurrence
+      val casePages = barrier(Fetch.fetchPages(
+        caseUrls.map(routedUrls(caseUrls)).distinct.toDS())(fetch))
       val fetchErrors = casePages.filter(col("fetch_error") =!= "")
         .select(col("url"), col("fetch_error").as("message"))
 
@@ -205,14 +219,9 @@ object Pipeline {
               concat(lit("../mf/"), m.getField("id"), lit(".jpg")))
               .as("iurl"),
             m.getField("caption").as("caption")))))
-    // dropDuplicates: two distinct URLs can still name one case — the
-    // case id comes from the path alone (`TextOps.caseId`), so the http
-    // and https spellings of a page share it — and would double every
-    // image page in that case's PDF after the groupBy re-collect
     val items = succ
       .select(col("case_id"), posexplode(col("img_items")))
       .toDF("case_id", "pos", "item")
-      .dropDuplicates("case_id", "pos")
     val fetched = Fetch.fetchBinary(
       items.select(col("item.iurl")).distinct().as[String])(fetchBinary)
       .filter(col("fetch_error") === "" && col("content").isNotNull)

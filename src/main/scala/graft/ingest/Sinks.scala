@@ -30,15 +30,12 @@ object Sinks {
     * order (the reference's key order, SURVEY §1.2). Other columns
     * (`status`, `missing_fields`, …) are left out; a frame missing a
     * document field fails analysis rather than write a partial document.
-    * Rows are partitioned on the file name as in the PDF sink
-    * ([[graft.sink.PdfSink.writePdfs]]): two rows that name one file (the
-    * http and https spellings of one case page) are written one after
-    * another by one task.
+    * Each task writes the rows of its own partition of `cases`; no two
+    * rows may name one file (`Pipeline` routes one row per case).
     */
   def writePerCaseJson(cases: DataFrame, dir: String): Unit = {
-    val out = graft.sink.PdfSink.byFileName(cases.select(
-      col("case_id"), col("case_name"),
-      to_json(struct(CaseJson.caseSchema.fieldNames.map(col): _*)).as("js")))
+    val out = cases.select(col("case_id"), col("case_name"),
+      to_json(struct(CaseJson.caseSchema.fieldNames.map(col): _*)).as("js"))
     Files.createDirectories(Paths.get(dir))
     out.foreachPartition { (it: Iterator[Row]) =>
       it.foreach { r =>

@@ -22,12 +22,16 @@ object TextOps {
   def nullIfEmpty(c: Column): Column =
     when(c === "", lit(null).cast("string")).otherwise(c)
 
+  /** [[caseId]]'s pattern (group 1 is the id), shared with the case key
+    * that `ingest.Pipeline` computes from the seed URLs.
+    */
+  private[graft] val caseIdPattern = "/cf/(\\w+)\\.html"
+
   /** P1 — case-id extraction from a URL (reference: regex `/cf/(\w+)\.html`
     * at /root/reference/src/extract.py:41-46; no-match routes to error
     * status rather than raising).
     */
-  def caseId(url: Column): Column =
-    regexp_extract(url, "/cf/(\\w+)\\.html", 1)
+  def caseId(url: Column): Column = regexp_extract(url, caseIdPattern, 1)
 
   /** P2 — date normalization: the FIRST `YYYY年M月D日` occurrence anywhere
     * in the text → zero-padded `YYYY-MM-DD`; raw text passthrough when no

@@ -18,19 +18,6 @@ import graft.ops.SimOps
   */
 object PackText2 {
 
-  /** 3-gram set of the first 200 chars (per-index substr is O(position) on
-    * UTF-8 — unbounded extraction is quadratic in text length; a bounded
-    * prefix is the standard fingerprinting tradeoff).
-    */
-  private def grams3(text0: org.apache.spark.sql.Column) = {
-    val text = substring(text0, 1, 200)
-    when(length(text) >= 3,
-      array_distinct(transform(
-        sequence(lit(1), length(text) - 2),
-        i => text.substr(i, lit(3)))))
-      .otherwise(array().cast("array<string>"))
-  }
-
   /** q27 — MinHash-LSH near-dup candidates, ORACLE-GATED as of round 11
     * (VERDICT r10 "Next round" #1): the whole hash chain — word-trigram
     * polynomial shingles, affine-family minhash, base-B band folds — is

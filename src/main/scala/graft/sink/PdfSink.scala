@@ -5,6 +5,7 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import graft.ingest.Fetch
 
 /** K2 — PDF report sink (reference render_pdf.py:324-471).
   *
@@ -272,19 +273,16 @@ object PdfSink {
     * (render_pdf.py:100-118); other content is skipped (no codec: only
     * the DCTDecode / FlateDecode passthroughs embed verbatim).
     *
-    * The successful rows are hash-partitioned on the file-name key
-    * `(case_id, case_name)` over the session's `defaultParallelism`:
-    * rows that share a file name are rendered one after another by one
-    * task, never by two at once, and the renders spread over every core
-    * (AQE would size the partitions by bytes and coalesce a small input
-    * into one task; a shuffle with a fixed partition count is never
-    * coalesced).
+    * The successful rows are spread round-robin over the session's
+    * `defaultParallelism` ([[Fetch.spread]]), so the renders run on
+    * every core: AQE would size the partitions by bytes and coalesce a
+    * small input into one task.
     */
   def writePdfs(cases: DataFrame, dir: String): Unit = {
     Files.createDirectories(Paths.get(dir))
     val hasImgs = cases.columns.contains("image_bytes")
     val hasCaps = cases.columns.contains("image_captions")
-    byFileName(cases.filter(col("status") === "success")).foreachPartition {
+    Fetch.spread(cases.filter(col("status") === "success")).foreachPartition {
       (it: Iterator[Row]) =>
         it.foreach { r =>
           val raw =
@@ -319,12 +317,4 @@ object PdfSink {
         }
     }
   }
-
-  /** `cases` hash-partitioned on the file-name key over the session's
-    * `defaultParallelism` (see [[writePdfs]]); the per-case JSON sink
-    * writes through it too.
-    */
-  private[graft] def byFileName(cases: DataFrame): DataFrame =
-    cases.repartition(cases.sparkSession.sparkContext.defaultParallelism,
-      col("case_id"), col("case_name"))
 }

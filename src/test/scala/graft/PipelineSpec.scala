@@ -370,18 +370,57 @@ class PipelineSpec extends SparkSpec
     } finally spark.listenerManager.unregister(listener)
   }
 
+  /** Runs `body` with a listener that records each PDF render task: a
+    * task of a stage called from PdfSink that reads rows (from a shuffle
+    * or a stored barrier) and writes no shuffle, so it rendered them.
+    * `body` reads them as (stage, partition, rows read) through the
+    * function it is given, which lists only the tasks of completed stages.
+    * Listener events arrive asynchronously: read them inside `eventually`.
+    */
+  private def withRenderTasks[A](
+      body: (() => Seq[(Int, Int, Long)]) => A): A = {
+    import scala.jdk.CollectionConverters._
+    val renderTasks =
+      new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int, Long)]()
+    val pdfStages = new java.util.concurrent.ConcurrentHashMap[Int, Unit]()
+    val doneStages = new java.util.concurrent.ConcurrentHashMap[Int, Unit]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      import org.apache.spark.scheduler._
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (e.stageInfo.name.contains("PdfSink.scala"))
+          pdfStages.put(e.stageInfo.stageId, ())
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        doneStages.put(e.stageInfo.stageId, ())
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
+        val m = e.taskMetrics
+        val read =
+          if (m == null) 0L
+          else m.shuffleReadMetrics.recordsRead + m.inputMetrics.recordsRead
+        if (pdfStages.containsKey(e.stageId) && read > 0 &&
+            m.shuffleWriteMetrics.recordsWritten == 0)
+          renderTasks.add((e.stageId, e.taskInfo.index, read))
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try body(() =>
+      renderTasks.asScala.toSeq.filter(t => doneStages.containsKey(t._1)))
+    finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("the http and https spellings of one case write one whole file " +
     "of each kind") {
-    // the case id comes from the path alone, so both spellings route as
-    // successes named CZ0200701_<name>; the sinks must not write that
-    // path from two tasks at once
+    // the case id comes from the path alone, so both spellings are one
+    // case: the reference processes them in order and the later one's
+    // files are left on disk; the roster keeps both occurrences
     val https = s"$base/cf/CZ0200701.html"
     val http = https.replaceFirst("^https:", "http:")
     val pages = sharedScenarioPages
     val jpeg = this.jpeg
-    val fetch: String => String = u =>
+    val fetch: String => String = u => {
+      PipelineSpec.pageFetches.add(u)
       pages.getOrElse(u.replaceFirst("^http:", "https:"),
         throw new java.io.IOException(s"404 $u"))
+    }
     def run(urls: Seq[String]): (Pipeline.Result, String) = {
       val out = Files.createTempDirectory("pipeline-spellings").toString
       (Pipeline.runUrls(spark, urls, limit = 2, outDir = out)(
@@ -392,18 +431,67 @@ class PipelineSpec extends SparkSpec
         .filter(n => n.endsWith(ext) && !n.startsWith("results_"))
         .map(n => Files.readAllBytes(Paths.get(out, n)))
 
-    val (res, out) = run(Seq(https, http))
-    assert(res.success === 2)
+    PipelineSpec.pageFetches.clear()
+    val (res, out) = withRenderTasks { rendered =>
+      val r = run(Seq(https, http))
+      eventually(timeout(30.seconds), interval(100.millis)) {
+        val tasks = rendered()
+        assert(tasks.nonEmpty && tasks.map(_._3).sum === 1,
+          s"PDF render tasks (stage, task, rows): $tasks")
+      }
+      r
+    }
+    import scala.jdk.CollectionConverters._
+    // the scenario link resolves against the routed (http) spelling
+    assert(PipelineSpec.pageFetches.asScala.toSeq.sorted ===
+      Seq(http, http.replace("/cf/CZ0200701", "/sf/SZ0200703")))
+    assert(res.total === 2 && res.success === 2)
     val json = files(out, ".json")
     val pdf = files(out, ".pdf")
     assert(json.size === 1 && pdf.size === 1)
-    new com.fasterxml.jackson.databind.ObjectMapper().readTree(json.head)
-    // each row's own documents, written by a run over that spelling alone
-    val alone = Seq(https, http).map(u => run(Seq(u))._2)
-    assert(alone.exists(o => files(o, ".json").head.sameElements(json.head)),
-      s"the JSON is not one row's document: ${new String(json.head, UTF_8)}")
-    assert(alone.exists(o => files(o, ".pdf").head.sameElements(pdf.head)),
-      "the PDF is not one row's document")
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    assert(mapper.readTree(json.head).get("url").asText === http)
+    // the manifest rosters each occurrence with its own URL, in order
+    val manifest = mapper.readTree(Paths.get(out, res.manifestFile).toFile)
+    assert(manifest.get("cases").elements().asScala.toSeq
+      .map(c => (c.get("url").asText, c.get("status").asText)) ===
+      Seq(https -> "success", http -> "success"))
+    // the documents are those of a run over the http spelling alone
+    val alone = run(Seq(http))._2
+    assert(files(alone, ".json").head.sameElements(json.head),
+      s"the JSON is not the http row's document: ${new String(json.head, UTF_8)}")
+    assert(files(alone, ".pdf").head.sameElements(pdf.head),
+      "the PDF is not the http row's document")
+  }
+
+  test("case pages without a case id route as one row per URL") {
+    // the case key falls back to the URL: two id-less /cf/ pages are two
+    // error rows, not one collapsed on the empty id
+    val pages = sharedScenarioPages ++ Map(
+      s"$base/cf/index.php" -> "<html><body>index</body></html>",
+      s"$base/cf/list.php" -> "<html><body>list</body></html>")
+    val fetch: String => String = u => {
+      PipelineSpec.pageFetches.add(u)
+      pages.getOrElse(u, throw new java.io.IOException(s"404 $u"))
+    }
+    PipelineSpec.pageFetches.clear()
+    val urls = Seq(s"$base/cf/index.php", s"$base/cf/CZ0200701.html",
+      s"$base/cf/list.php")
+    val out = Files.createTempDirectory("pipeline-no-id").toString
+    val res = Pipeline.runUrls(spark, urls, limit = 3, outDir = out)(fetch)
+    assert((res.total, res.success, res.error) === ((3, 1, 2)))
+    import scala.jdk.CollectionConverters._
+    assert(PipelineSpec.pageFetches.asScala.toSeq.sorted ===
+      (urls :+ s"$base/sf/SZ0200703.html").sorted)
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val manifest = mapper.readTree(Paths.get(out, res.manifestFile).toFile)
+    assert(manifest.get("cases").elements().asScala.toSeq
+      .map(c => (c.get("url").asText, c.get("status").asText)) ===
+      urls.zip(Seq("error", "success", "error")))
+    val written = new java.io.File(out).list().toSeq
+      .filterNot(_ == res.manifestFile).sorted
+    assert(written.size === 2 && written.forall(_.startsWith("CZ0200701_")),
+      s"written: $written")
   }
 
   test("the scenario fetch, the image fetch and the PDF render each run " +
@@ -419,29 +507,9 @@ class PipelineSpec extends SparkSpec
     val jpeg = this.jpeg
     val task: String => Unit = u => PipelineSpec.fetchTasks.add(
       u -> org.apache.spark.TaskContext.get.partitionId)
-    // (stage, partition) of each PDF render task that read a row: a task
-    // of a stage called from PdfSink that reads rows (from a shuffle or
-    // a stored barrier) and writes no shuffle, so it rendered them
-    val renderTasks =
-      new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int)]()
-    val pdfStages = new java.util.concurrent.ConcurrentHashMap[Int, Unit]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      import org.apache.spark.scheduler._
-      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-        if (e.stageInfo.name.contains("PdfSink.scala"))
-          pdfStages.put(e.stageInfo.stageId, ())
-      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-        val m = e.taskMetrics
-        if (pdfStages.containsKey(e.stageId) && m != null &&
-            m.shuffleReadMetrics.recordsRead + m.inputMetrics.recordsRead > 0 &&
-            m.shuffleWriteMetrics.recordsWritten == 0)
-          renderTasks.add(e.stageId -> e.taskInfo.index)
-      }
-    }
     PipelineSpec.fetchTasks.clear()
     val out = Files.createTempDirectory("pipeline-parallel").toString
-    spark.sparkContext.addSparkListener(listener)
-    try {
+    withRenderTasks { rendered =>
       val res = Pipeline.runUrls(
         spark, ids.map(id => s"$base/cf/CZ$id.html"), limit = 10,
         outDir = out)(
@@ -461,13 +529,22 @@ class PipelineSpec extends SparkSpec
       assert(scen._1 >= 8 && img._1 >= 8, s"URLs fetched: $fetched")
       // listener events arrive asynchronously
       eventually(timeout(30.seconds), interval(100.millis)) {
-        val render = renderTasks.asScala.toSeq.groupBy(_._1).values
+        val render = rendered().groupBy(_._1).values
           .map(_.map(_._2).distinct.size).maxOption.getOrElse(0)
         assert(scen._2 > 1 && img._2 > 1 && render > 1,
           s"tasks: scenario fetch ${scen._2}, image fetch ${img._2}, " +
             s"PDF render $render")
       }
-    } finally spark.sparkContext.removeSparkListener(listener)
+      // the case URLs are a local seed: its scan spreads them, with no
+      // shuffle in front of the fetch
+      val cases = fetched.filter(_._1.contains("/cf/"))
+      assert(cases.map(_._1).distinct.size === 10 &&
+        cases.map(_._2).distinct.size > 1, s"case fetch tasks: $cases")
+    }
+    import spark.implicits._
+    val lone = graft.ingest.Fetch.fetchPages(Seq(s"$base/lis/a.html").toDS())(
+      identity).queryExecution.executedPlan.treeString
+    assert(!lone.contains("Exchange"), s"a lone URL is shuffled:\n$lone")
   }
 
   test("barriers are released after a run and after a failing sink") {
