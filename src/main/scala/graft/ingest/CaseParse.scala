@@ -120,6 +120,10 @@ object CaseParse {
     * (extract.py:284-286 raises, run.py:113-120 catches), so every case
     * pointing at a failed scenario page is an error too, not an
     * excluded-for-missing-シナリオ.
+    *
+    * `scenarioPages` holds one row per scenario page, as the fetch of a
+    * distinct URL set yields it: each page is parsed once (§4.1), and a
+    * repeated page would repeat its cases.
     */
   def enrichAndRoute(
       cases: DataFrame,
@@ -127,7 +131,6 @@ object CaseParse {
       fetchErrors: Option[DataFrame] = None,
       scenarioErrors: Option[DataFrame] = None): DataFrame = {
     val scen = ScenarioParse.parse(scenarioPages)
-      .dropDuplicates("scenario_url") // parse each page once (§4.1)
     // unhinted: scenario count is O(cases) in the worst case, so the plan
     // must be allowed to shuffle on scenario_url; AQE broadcasts the
     // typical small frame at runtime

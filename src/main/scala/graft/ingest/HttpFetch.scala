@@ -14,8 +14,9 @@ import java.time.Duration
   * object methods, so an executor deserializing the closure touches the
   * lazily-built per-JVM client — java.net.http.HttpClient keeps an
   * internal connection pool, giving keep-alive reuse across the rows of
-  * every partition that executor runs, which is exactly the per-partition
-  * client discipline Fetch's scaladoc prescribes. Redirects follow
+  * every partition that executor runs. The client is thread-safe, as
+  * Fetch requires: a task's overlapped calls share it, each on its own
+  * connection. Redirects follow
   * `NORMAL` policy (http→https allowed, not https→http), like requests'
   * default.
   */

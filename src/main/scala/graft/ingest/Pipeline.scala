@@ -40,6 +40,21 @@ import graft.ops.Lineage
   * the later one's files are left on disk. Each case page is fetched,
   * parsed and written once (§4.1), and no two rows name one file; input
   * occurrences exist only in the manifest roster, each with its own URL.
+  *
+  * Derived fetches: the scenario URLs of the parsed cases and the image
+  * URLs of the successful ones repeat (cases share a scenario page, a
+  * page repeats an image). Each set goes through one exchange, hashed on
+  * the URL over `defaultParallelism` ([[Fetch.byUrl]]), and each task
+  * fetches every URL it holds once, with its calls overlapped
+  * ([[Fetch.inFlight]]). The image rows carry their case, position and
+  * caption through that exchange, so no join brings the bytes back to
+  * them.
+  *
+  * Job descriptions: every job of a run carries its step's name as its
+  * description ("list crawl", "case fetch", "case parse", "scenario
+  * fetch", "route", "JSON sink", "PDF sink", "manifest"), AQE's stage
+  * jobs too, which inherit the thread's local properties; the caller's
+  * own description is back when a step ends.
   */
 object Pipeline {
 
@@ -59,8 +74,23 @@ object Pipeline {
     import spark.implicits._
     val lp = Fetch.fetchPages(Seq(listUrl).toDS())(fetch)
       .filter(col("fetch_error") === "")
-    CaseParse.caseUrlsFromLists(lp, limit).as[String].collect().toSeq
+    step(spark, "list crawl")(
+      CaseParse.caseUrlsFromLists(lp, limit).as[String].collect().toSeq)
   }
+
+  /** Runs `body` with `name` as the description of the jobs it starts,
+    * then restores the caller's description.
+    */
+  private def step[A](spark: SparkSession, name: String)(body: => A): A = {
+    val sc = spark.sparkContext
+    val caller = sc.getLocalProperty(JobDescription)
+    sc.setJobDescription(name)
+    try body
+    finally sc.setLocalProperty(JobDescription, caller)
+  }
+
+  /** `SparkContext.SPARK_JOB_DESCRIPTION`, which is `private[spark]`. */
+  private final val JobDescription = "spark.job.description"
 
   /** Run end-to-end — run.py CLI parity (run.py:66-81): URLs may mix list
     * pages (`/lis/`, expanded with the PER-LIST limit), direct case pages
@@ -109,11 +139,11 @@ object Pipeline {
 
     val routedUrl = routedUrls(caseUrls)
     routeCases(spark, caseUrls)(fetch) { routed =>
-      Sinks.writePerCaseJson(routed.filter(col("status") === "success"), outDir)
-      if (writePdf)
-        graft.sink.PdfSink.writePdfs(
-          if (fetchBinary == null) routed else withImages(routed, fetchBinary),
-          outDir)
+      step(spark, "JSON sink")(Sinks.writePerCaseJson(
+        routed.filter(col("status") === "success"), outDir))
+      if (writePdf) step(spark, "PDF sink")(graft.sink.PdfSink.writePdfs(
+        if (fetchBinary == null) routed else withImages(routed, fetchBinary),
+        outDir))
       // the roster lists every input occurrence in PROCESSING order
       // (run.py:95-133 appends as it goes, without dedup): a case's routed
       // row joins once per occurrence of its key, each with the
@@ -121,8 +151,9 @@ object Pipeline {
       // contract; joined, not broadcast-hinted.
       val occurrences = caseUrls.zipWithIndex
         .map { case (u, i) => (u, i, routedUrl(u)) }.toDF("url", "seq", "key")
-      val m = Sinks.writeRunManifest(occurrences.join(
-        routed.withColumnRenamed("url", "key"), "key"), outDir, writePdf)
+      val m = step(spark, "manifest")(Sinks.writeRunManifest(
+        occurrences.join(routed.withColumnRenamed("url", "key"), "key"),
+        outDir, writePdf))
       Result(outDir, m.file, m.total, m.success, m.excluded, m.error)
     }
   }
@@ -151,8 +182,8 @@ object Pipeline {
     // releases them, so a failure in a later barrier or in `use` still
     // frees the blocks already stored
     val barriers = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def barrier(df: DataFrame): DataFrame = {
-      val b = Lineage.truncate(df)
+    def barrier(name: String, df: DataFrame): DataFrame = {
+      val b = step(spark, name)(Lineage.truncate(df))
       barriers += b
       b
     }
@@ -163,21 +194,22 @@ object Pipeline {
       // pages feed the error list and the case parse; each case key's URL
       // is fetched exactly once, so a transient failure cannot route one
       // case differently per branch or per occurrence
-      val casePages = barrier(Fetch.fetchPages(
+      val casePages = barrier("case fetch", Fetch.fetchPages(
         caseUrls.map(routedUrls(caseUrls)).distinct.toDS())(fetch))
       val fetchErrors = casePages.filter(col("fetch_error") =!= "")
         .select(col("url"), col("fetch_error").as("message"))
 
       // BARRIER: the parsed cases feed the scenario-url derivation and the
       // routing join, so each case page parses once. Each DISTINCT
-      // scenario page is then fetched once (BARRIER: errors + parse);
-      // scenario fetch failures route their cases to 'error' with the
-      // message (reference: fetch_html raises inside the per-case try,
-      // run.py:113-120)
-      val cases = barrier(CaseParse.parseMainPages(casePages))
-      val scenUrls = cases.select(col("scenario_url")).distinct()
+      // scenario page is then fetched once, one row per page (BARRIER:
+      // errors + parse); scenario fetch failures route their cases to
+      // 'error' with the message (reference: fetch_html raises inside the
+      // per-case try, run.py:113-120)
+      val cases = barrier("case parse", CaseParse.parseMainPages(casePages))
+      val scenUrls = cases.select(col("scenario_url"))
         .filter(col("scenario_url") =!= "").as[String]
-      val scenPagesAll = barrier(Fetch.fetchPages(scenUrls)(fetch))
+      val scenPagesAll =
+        barrier("scenario fetch", Fetch.fetchDistinctPages(scenUrls)(fetch))
       val scenErrors = scenPagesAll.filter(col("fetch_error") =!= "")
         .select(col("url").as("scenario_url"),
           col("fetch_error").as("scen_message"))
@@ -185,7 +217,7 @@ object Pipeline {
 
       // BARRIER: the sinks and the image assembly all read the routed
       // cases; their plans start from this leaf
-      use(barrier(CaseParse
+      use(barrier("route", CaseParse
         .enrichAndRoute(cases, scenPages, Some(fetchErrors), Some(scenErrors))))
     } finally barriers.foreach(Lineage.release)
   }
@@ -201,8 +233,9 @@ object Pipeline {
     // first (render_pdf.py:361-365, {BASE}/df/{rep}), then every
     // multimedia item as {BASE}/mf/{id}.jpg with its caption
     // (render_pdf.py:410-420). One binary fetch per DISTINCT url
-    // across all cases (fetch-once, §4.1), joined back by position;
-    // failed fetches drop their page+caption (add_image skips).
+    // across all cases (fetch-once, §4.1): each task fetches the URLs it
+    // holds once and hands the bytes to every item of the URL; failed
+    // fetches drop their page+caption (add_image skips).
     val succ = routed.filter(col("status") === "success")
       .withColumn("img_items", concat(
         when(col("rep_img_url") =!= "",
@@ -221,19 +254,25 @@ object Pipeline {
             m.getField("caption").as("caption")))))
     val items = succ
       .select(col("case_id"), posexplode(col("img_items")))
-      .toDF("case_id", "pos", "item")
-    val fetched = Fetch.fetchBinary(
-      items.select(col("item.iurl")).distinct().as[String])(fetchBinary)
-      .filter(col("fetch_error") === "" && col("content").isNotNull)
-      .select(col("url"), col("content"))
+      .select(col("case_id"), col("pos"), col("col.iurl").as("iurl"),
+        col("col.caption").as("caption"))
+      .as[(String, Int, String, String)]
+    val fetched = Fetch.byUrl(items, "iurl").mapPartitions { it =>
+      val itemsOf = it.toSeq.groupBy(_._3)
+      Fetch.inFlight(itemsOf.keysIterator)(fetchBinary).flatMap {
+        case (u, Right(bytes)) if bytes != null =>
+          itemsOf(u).map { case (id, pos, _, cap) => (id, pos, bytes, cap) }
+        case _ => Nil
+      }
+    }.toDF("case_id", "pos", "content", "caption")
     // NO broadcast hint: image bytes scale with the number of
-    // successful cases — a shuffle join on the url stays bounded
-    // per-partition; AQE still broadcasts when the frame is small
-    val perCase = items
-      .join(fetched, col("item.iurl") === col("url"))
+    // successful cases — the group and the join shuffle on the case id
+    // and stay bounded per-partition; AQE still broadcasts when the
+    // frame is small
+    val perCase = fetched
       .groupBy("case_id")
       .agg(sort_array(collect_list(struct(col("pos"), col("content"),
-        col("item.caption").as("caption")))).as("xs"))
+        col("caption")))).as("xs"))
       .select(col("case_id"),
         transform(col("xs"), x => x.getField("content"))
           .as("image_bytes"),

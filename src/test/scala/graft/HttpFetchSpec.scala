@@ -4,7 +4,7 @@ import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import graft.ingest.{HttpFetch, Pipeline}
+import graft.ingest.{Fetch, HttpFetch, Pipeline}
 
 /** The deployable HTTP client over real sockets: an in-process HttpServer
   * serves the fixture site and the full pipeline runs against it through
@@ -88,6 +88,42 @@ class HttpFetchSpec extends SparkSpec {
       assert(HttpFetch.binary(s"$base/img.png").toSeq === png.toSeq)
       val e = intercept[java.io.IOException](HttpFetch.text(s"$base/missing"))
       assert(e.getMessage.startsWith("HTTP 404"))
+    }
+  }
+
+  test("one task keeps several requests in flight over real sockets") {
+    // each response takes 50 ms, served by a pool as wide as the window
+    val open = new java.util.concurrent.atomic.AtomicInteger
+    val peak = new java.util.concurrent.atomic.AtomicInteger
+    val ports = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val handlers = java.util.concurrent.Executors.newFixedThreadPool(Fetch.Window)
+    val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    server.setExecutor(handlers)
+    server.createContext("/", (ex: HttpExchange) => {
+      peak.accumulateAndGet(open.incrementAndGet(), math.max)
+      ports.add(ex.getRemoteAddress.getPort)
+      try {
+        Thread.sleep(50)
+        val body = ex.getRequestURI.getPath.getBytes(UTF_8)
+        ex.sendResponseHeaders(200, body.length.toLong)
+        ex.getResponseBody.write(body)
+      } finally {
+        open.decrementAndGet()
+        ex.close()
+      }
+    })
+    server.start()
+    try {
+      val base = s"http://127.0.0.1:${server.getAddress.getPort}"
+      val urls = (1 to 32).map(i => s"$base/p$i.html")
+      val got = spark.sparkContext.parallelize(urls, 1)
+        .mapPartitions(Fetch.inFlight(_)(HttpFetch.text)).collect().toSeq
+      assert(got === urls.map(u => u -> Right(u.stripPrefix(base))))
+      assert(peak.get > 1 && peak.get <= Fetch.Window, s"peak ${peak.get}")
+      assert(ports.size > 1, s"client ports $ports")
+    } finally {
+      server.stop(0)
+      handlers.shutdownNow()
     }
   }
 }

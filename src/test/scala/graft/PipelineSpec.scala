@@ -547,6 +547,53 @@ class PipelineSpec extends SparkSpec
     assert(!lone.contains("Exchange"), s"a lone URL is shuffled:\n$lone")
   }
 
+  test("every job of a run carries its step's name; the caller's " +
+    "description is back afterwards") {
+    val steps = Set("list crawl", "case fetch", "case parse",
+      "scenario fetch", "route", "JSON sink", "PDF sink", "manifest")
+    val group = "pipeline-steps"
+    val sc = spark.sparkContext
+    // descriptions of the jobs started in `group`, in start order
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null &&
+            e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.add(String.valueOf(
+            e.properties.getProperty("spark.job.description")))
+    }
+    val pages = sharedScenarioPages +
+      (s"$base/lis/cat1.html" -> fixture("list_cat.html"))
+    val jpeg = this.jpeg
+    val out = Files.createTempDirectory("pipeline-steps").toString
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "the caller's own")
+      val res = Pipeline.runUrls(spark,
+        Seq(s"$base/lis/cat1.html", s"$base/cf/CZ0200703.html"),
+        limit = 1, outDir = out)(
+        u => pages.getOrElse(u, throw new java.io.IOException(s"404 $u")),
+        _ => jpeg)
+      assert(res.success === 2)
+      assert(sc.getLocalProperty("spark.job.description") === "the caller's own")
+      // the listener bus keeps order: once the marker's job is seen, so
+      // are all of the run's
+      sc.setJobDescription("marker")
+      sc.parallelize(Seq(1), 1).count()
+      import scala.jdk.CollectionConverters._
+      eventually(timeout(30.seconds), interval(100.millis)) {
+        assert(jobs.contains("marker"))
+      }
+      val run = jobs.asScala.toSeq.takeWhile(_ != "marker")
+      // every job carries a step's name, and every step ran a job
+      assert(run.toSet === steps, s"job descriptions: $run")
+    } finally {
+      sc.removeSparkListener(listener)
+      sc.clearJobGroup()
+    }
+  }
+
   test("barriers are released after a run and after a failing sink") {
     import org.apache.spark.storage.RDDBlockId
     val sc = spark.sparkContext
